@@ -6,10 +6,10 @@ advances one successor-chain element per round) costs one distributed
 synchronization barrier per derived element — milliseconds of work behind
 seconds of scheduling, repeated hundreds of times. The reference engine is
 single-node, so it never pays this. Our answer is the same size-adaptive
-strategy as the small-graph fast paths in ops/graph.py / kg/canonicalize.py:
-when every table a stratum touches is below a row threshold, collect once,
-run the complete fixpoint with in-memory hash joins (this module), and
-parallelize the result back — identical output, one job instead of O(chain
+strategy as the small-graph fast paths in ops/graph.py / kg/canonicalize.py,
+through the same gate (session.local_rows): when every table a stratum
+touches is below a row threshold, collect once, run the complete fixpoint
+with in-memory hash joins (this module), and parallelize the result back — identical output, one job instead of O(chain
 length) barriers. Data-sized strata keep the distributed path.
 
 Supported rule features: positive joins, negation, constants, repeated

@@ -843,7 +843,7 @@ class SemiNaiveEngine:
         total = sum(self._table_counts.get(p, 0) for p in preds)
         if total > self.local_stratum_threshold:
             return False
-        from pyspark.sql import Row
+        from nemo_spark.session import local_rows
 
         t0 = time.time()
         tables: dict[str, set] = {}
@@ -851,16 +851,14 @@ class SemiNaiveEngine:
         for p in preds:
             if p not in self._tables:
                 continue
-            rows = set()
-            for r in self._tables[p].collect():
-                if any(c is None for c in r):
-                    # SQL-NULL cells have no local equivalent with Spark
-                    # semantics (None == None would JOIN where SQL NULL never
-                    # does, and a None head cell would survive where
-                    # _project_head drops it) — such strata stay distributed
-                    return False
-                rows.add(tuple(tuple(c) if isinstance(c, Row) else c for c in r))
-            tables[p] = rows
+            # the count gate above already bounds the collect. NULL or NaN
+            # cells and non-atomic columns have no local equivalent with
+            # Spark semantics (and a None head cell would survive where
+            # _project_head drops it) — such strata stay distributed
+            rows = local_rows(self._tables[p])
+            if rows is None:
+                return False
+            tables[p] = set(rows)
             typed_flags.append(_is_value_struct_df(self._tables[p]))
         # a MIXED stratum (typed value-struct tables alongside raw ones)
         # can't pick one schema/skolem/aggregate convention for its derived

@@ -1,21 +1,21 @@
-"""Hash-min connected components for entity canonicalization.
+"""Connected components for entity canonicalization.
 
-Iterative min-label propagation over an undirected edge list, as a DataFrame
-fixpoint job — the same delta-driven kernel as the rule engine (nemo analogy:
-a recursive Datalog program ``label(x, min(l))``), but specialized because the
-aggregate-in-recursion pattern is not stratifiable; hash-min is the standard
-distributed-CC construction.
+Every node is labeled with the minimum node id in its component — the
+hash-min canonicalization convention (nemo analogy: a recursive Datalog
+program ``label(x, min(l))``), specialized because the aggregate-in-recursion
+pattern is not stratifiable.
 
-Algorithm (label = lexicographic min node id reachable):
-  label0(x)   = min(x, min over neighbors y of y)
-  label_{t+1}(x) = min(label_t(x), min over neighbors y of label_t(y))
-until no label changes. Converges in O(diameter) rounds.
+Two paths, identical output:
 
-Scale: each round is one shuffle (groupBy node); edges are repartitioned by
-src once and reused; ``localCheckpoint`` every ``checkpoint_every`` rounds
-truncates the growing plan (or a CheckpointStore persists resumable parquet
-snapshots). Skewed hub nodes are handled by AQE skew-join splitting; the
-groupBy min is a partial (map-side) aggregate so hot labels don't hotspot.
+- small graphs (below ``small_graph_threshold`` edges) are collected through
+  the shared driver-local gate (:func:`nemo_spark.session.local_rows`) and
+  closed by union-find on the driver in one Spark job;
+- everything else runs alternating large-star / small-star rounds as a
+  DataFrame fixpoint: O(log n) rounds regardless of diameter, each step one
+  groupBy plus one join, a ``localCheckpoint`` per round and, with a
+  CheckpointStore, a resumable parquet snapshot every ``checkpoint_every``
+  rounds. Skewed hub nodes are handled by AQE skew-join splitting; the
+  groupBy min is a partial (map-side) aggregate so hot labels don't hotspot.
 """
 
 from __future__ import annotations
@@ -26,6 +26,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from nemo_spark.session import local_rows, single_slice_frame
 
 log = logging.getLogger("nemo_spark.cc")
 
@@ -38,7 +41,6 @@ def connected_components(
     checkpoint_store: Any | None = None,
     max_rounds: int = 60,
     small_graph_threshold: int = 100_000,
-    method: str = "auto",  # 'auto' | 'hashmin' (O(diameter) rounds) | 'star' (O(log n))
 ) -> DataFrame:
     """Return (node, component) where component = min node id in the CC.
 
@@ -48,60 +50,29 @@ def connected_components(
     ``small_graph_threshold`` > 0 enables a size-adaptive fast path: when the
     edge list is below the threshold (dimension-sized graphs, e.g. an alias
     dictionary), collect the gate's bounded scan and union-find driver-side
-    — one Spark job instead of O(diameter) shuffle rounds, and the result
+    — one Spark job instead of O(log n) shuffle rounds, and the result
     is a local relation that is free to broadcast. Output is identical
-    (min node id per component).
+    (min node id per component). Above the threshold, or on input the gate
+    declines, the alternating-star algorithm runs distributed.
 
-    ``method='auto'`` (default) picks the alternating-star algorithm for
-    anything above the small-graph threshold: O(log n) rounds regardless of
-    diameter, so a 100-TB graph with a long-chain component never pays
-    O(diameter) shuffles. ``'hashmin'`` stays available (fewer per-round
-    jobs; fine when the diameter is known-small).
+    A half-NULL edge registers its non-null node as an isolated node (SQL
+    join semantics — NULL connects nothing); a both-NULL edge drops.
     """
-    if method not in ("auto", "star", "hashmin"):
-        # validate BEFORE any probe job or the small-graph fast path: a
-        # typo'd method must not succeed on test-sized inputs and only
-        # explode on production-sized ones
-        raise ValueError(f"unknown cc method: {method}")
-    # NULL-endpoint normalization, identical for every path: an edge with
-    # one NULL endpoint registers its non-null node as an isolated self-edge
-    # (SQL join semantics — NULL connects nothing), a both-NULL edge drops.
-    # Without this the distributed path emitted a bogus (NULL, label) row
-    # while the single-task path composed through None keys. Gated behind a
-    # probe so null-free inputs (the common case) don't carry the extra
-    # union in every fixpoint round's plan. ONE bounded probe answers BOTH
-    # gates when the graph is small: the limit(threshold+1) scan sees every
-    # edge, so it counts null endpoints for free — a separate null probe
-    # would re-derive the whole edge frame a second time (a whole extra
-    # Spark job/barrier per call). The schema-nullability check still skips
-    # the standalone probe for engine-internal frames with provably
-    # non-null columns on the distributed path.
+    dt = edges.schema[src].dataType
+    # the local path unions both endpoint columns into one node domain: only
+    # sound when their types agree (mixed types also make min-label CC
+    # ill-defined — let the distributed path surface Spark's coercion), and
+    # it orders nodes in Python, which cannot order a struct's NULL fields
+    if small_graph_threshold and dt == edges.schema[dst].dataType and not isinstance(dt, StructType):
+        rows = local_rows(edges.select(F.col(src), F.col(dst)), small_graph_threshold)
+        if rows is not None:
+            return _local_cc(edges.sparkSession, rows, dt)
+    # NULL-endpoint normalization, gated behind a probe so null-free inputs
+    # (the common case) don't carry the extra union in every round's plan;
+    # the schema-nullability check skips the probe for provably non-null
+    # columns
     nullable = edges.schema[src].nullable or edges.schema[dst].nullable
     both = F.col(src).isNotNull() & F.col(dst).isNotNull()
-    # the single-task path unions both endpoint columns into one node
-    # domain: only sound when their types agree (mixed types also make
-    # min-label CC ill-defined — let the distributed path surface
-    # Spark's coercion consistently)
-    small_ok = bool(small_graph_threshold) and (
-        edges.schema[src].dataType == edges.schema[dst].dataType
-    )
-    if small_ok:
-        # the gate IS the data: collect at most threshold+1 rows (bounded —
-        # never a full materialization of a 100-TB edge relation) and, when
-        # the graph fits, union-find driver-side in ONE Spark job total
-        # (output is linear in nodes, so no size fallback needed). The
-        # former shape spent three jobs — count probe, null probe, single-
-        # task mapInPandas — each re-deriving the edge frame. Same size-
-        # gated local pattern as the engine's <=100k local fixpoint; the
-        # single-slice driver-local result is cheap to broadcast downstream.
-        rows = edges.select(F.col(src), F.col(dst)).limit(small_graph_threshold + 1).collect()
-        if len(rows) <= small_graph_threshold and not any(
-            isinstance(v, float) and v != v for r in rows for v in (r[0], r[1])
-        ):
-            # (NaN node ids fall through to the distributed path: Python's
-            # nan != nan breaks dict-keyed union-find and diverges from
-            # SQL's NaN = NaN join equality)
-            return _local_cc(edges.sparkSession, rows, edges.schema[src].dataType)
     if nullable and not edges.where(~both).limit(1).isEmpty():
         half = (
             edges.where(~both & (F.col(src).isNotNull() | F.col(dst).isNotNull()))
@@ -109,78 +80,7 @@ def connected_components(
             .select(F.col(src), F.col(src).alias(dst))
         )
         edges = edges.where(both).select(F.col(src), F.col(dst)).unionByName(half)
-    if method in ("auto", "star"):
-        return _star_cc(edges, src, dst, checkpoint_every, max_rounds, checkpoint_store)
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .dropDuplicates()
-        .repartition("a")
-        .persist()
-    )
-    # label(x) = min(x, min neighbor)
-    labels = (
-        sym.groupBy("a")
-        .agg(F.least(F.first("a"), F.min("b")).alias("label"))
-        .select(F.col("a").alias("node"), "label")
-        .persist()
-    )
-    rounds = 0
-    changed = 0
-    # persisted: the handle that OWNS each round's cache entry — unpersist
-    # must run on the persisted DataFrame itself, not a derived plan
-    # (Spark's cache lookup is by plan; old.unpersist() on a drop()
-    # derivative was a silent no-op and every round's labels leaked)
-    persisted = labels
-    while rounds < max_rounds:
-        rounds += 1
-        t0 = time.time()
-        # candidate labels via neighbors: min over label(b) for each a
-        nbr = (
-            sym.join(labels.withColumnRenamed("node", "b"), on="b")
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
-                (F.col("nbr_label") < F.col("label")).alias("__changed"),
-            )
-        ).persist()
-        # full count, not limit(1): the probe is also what materializes the
-        # persist — an early-exit count caches only the partitions it
-        # touched, and unpersisting the previous round then forces the
-        # uncached rest to recompute through the whole inter-checkpoint
-        # lineage window
-        changed = new_labels.filter(F.col("__changed")).count()
-        labels = new_labels.drop("__changed")
-        if checkpoint_store is not None and rounds % checkpoint_every == 0:
-            labels = checkpoint_store.snapshot("cc_labels", labels, rounds)
-        elif rounds % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
-        persisted.unpersist()
-        persisted = new_labels
-        log.debug("cc round %d changed=%s %.2fs", rounds, bool(changed), time.time() - t0)
-        if not changed:
-            break
-    if changed:
-        # LOUD cap (same contract as the engine's fixpoint round cap):
-        # returning labels that were still changing is silent corruption —
-        # nodes of one component would carry different labels
-        persisted.unpersist()
-        sym.unpersist()
-        raise ValueError(
-            f"connected_components(hashmin) did not converge in {max_rounds} rounds "
-            f"(graph diameter exceeds the cap); raise max_rounds or use method='star'"
-        )
-    result = labels.select(F.col("node"), F.col("label").alias("component")).localCheckpoint(
-        eager=True
-    )
-    persisted.unpersist()
-    sym.unpersist()
-    return result
+    return _star_cc(edges, src, dst, checkpoint_every, max_rounds, checkpoint_store)
 
 
 def _star_cc(
@@ -192,8 +92,8 @@ def _star_cc(
     checkpoint_store: Any | None = None,
 ) -> DataFrame:
     """Alternating large-star / small-star connected components — O(log n)
-    rounds regardless of graph diameter (vs hash-min's O(diameter)), the
-    right plan for high-diameter graphs (long chains) at cluster scale.
+    rounds regardless of graph diameter, so a long-chain component never
+    costs O(diameter) shuffles at cluster scale.
 
     large-star: every node points its LARGER neighbors at its minimum
     neighborhood label; small-star: every node and its smaller neighbors
@@ -275,12 +175,9 @@ def _star_cc(
 
 
 def _local_cc(spark, rows, dt) -> DataFrame:
-    """Driver-side union-find for gate-collected graphs — the caller already
-    holds every edge (bounded by ``limit(threshold+1).collect()``), so this
-    costs zero extra Spark jobs and returns a single-slice driver-local
-    frame (session.single_slice_frame). NULL handling
-    matches the distributed path's normalization: a half-NULL edge registers
-    its non-null node as isolated, a both-NULL edge drops."""
+    """Driver-side union-find over the gate's rows — the caller already
+    holds every edge, so this costs zero extra Spark jobs and returns a
+    single-slice driver-local frame."""
     parent: dict = {}
 
     def find(x):
@@ -290,25 +187,14 @@ def _local_cc(spark, rows, dt) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in rows:
-        a, b = r[0], r[1]
-        if a is None and b is None:
-            continue
-        if a is None or b is None:
-            find(a if b is None else b)  # register as isolated node
-            continue
+    for a, b in rows:
         ra, rb = find(a), find(b)
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    from pyspark.sql.types import StructField, StructType
-
-    from nemo_spark.session import single_slice_frame
-
     schema = StructType([StructField("node", dt), StructField("component", dt)])
-    nodes = list(parent)
-    return single_slice_frame(spark, [(n, find(n)) for n in nodes], schema)
+    return single_slice_frame(spark, [(n, find(n)) for n in list(parent)], schema)
 
 
 def canonical_map_from_alias_dict(alias_dict: DataFrame, small_graph_threshold: int = 100_000) -> DataFrame:
@@ -317,7 +203,7 @@ def canonical_map_from_alias_dict(alias_dict: DataFrame, small_graph_threshold: 
     namespaced ('a:' / 'e:') so aliases and entities cannot collide.
 
     Alias dictionaries are dimension-sized, so the size-adaptive fast path
-    usually engages; huge dictionaries fall back to distributed hash-min."""
+    usually engages; huge dictionaries fall back to distributed star CC."""
     edges = alias_dict.select(
         F.concat(F.lit("a:"), F.col("alias")).alias("src"),
         F.concat(F.lit("e:"), F.col("entity_id")).alias("dst"),

@@ -6,14 +6,17 @@ per-partition lineage + metrics, so runs resume mid-pipeline):
 
 1. extract   — vectorized Arrow-batched triple extraction per turn
 2. link      — broadcast alias-dictionary join (exact) per mention
-3. canonical — hash-min connected components over the alias/entity graph
+3. canonical — connected components over the alias/entity graph, each
+               node labeled with its component's min id (driver-local
+               union-find for dimension-sized graphs, star CC otherwise)
 4. triples   — canonicalized, set-semantics (subj, pred, obj)
-5. closure   — semi-naive fixpoint: transitive predicates materialized
-               through the generic rule engine (nemo's evaluation core)
+5. closure   — semi-naive fixpoint: transitive predicates materialized by
+               ``ops/graph.transitive_closure`` (path doubling, or a
+               driver-local closure for small graphs)
 
-The closure stage IS nemo re-imagined: derived triples are produced by
-repeatedly joining a delta against the accumulating fact table until no new
-facts appear (``nemo/src/execution/execution_engine.rs:295-345``).
+The closure stage follows nemo's evaluation core: derived triples are
+produced by repeatedly joining a delta against the accumulating fact table
+until no new facts appear (``nemo/src/execution/execution_engine.rs:295-345``).
 """
 
 from __future__ import annotations

@@ -23,6 +23,9 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from nemo_spark.session import local_rows, single_slice_frame
 
 log = logging.getLogger("nemo_spark.graph")
 
@@ -46,22 +49,19 @@ def transitive_closure(
     worst-case quadratic in nodes (a 100k-node chain closes to 5x10^9
     pairs), so the local path is additionally bounded by
     :data:`_LOCAL_TC_MAX_PAIRS`; CC output is linear in nodes, so its
-    threshold can be 10x higher."""
-    if (
-        small_graph_threshold
-        # the local path types its output columns from src's type
-        # (closure composes dst back into src positions, so the types must
-        # agree for the operation to be meaningful anyway)
-        and edges.schema[src].dataType == edges.schema[dst].dataType
-    ):
-        # the gate IS the data: collect at most threshold+1 rows (bounded —
-        # never a full materialization of a 100-TB edge relation) and, when
-        # the graph fits, close it driver-side in one Spark job total. The
-        # former shape spent three jobs (count probe, null probe, single
-        # task mapInPandas), each re-deriving the edge frame. Same
-        # size-gated local pattern as the engine's <=100k local fixpoint.
-        rows = edges.select(F.col(src), F.col(dst)).limit(small_graph_threshold + 1).collect()
-        if len(rows) <= small_graph_threshold:
+    threshold can be 10x higher.
+
+    NULL endpoints follow SQL join semantics: they are carried outward
+    through compositions ((NULL, y)∘(y, z) = (NULL, z)) but a path never
+    continues through a NULL. Edges with NULL or NaN endpoints therefore
+    always take the distributed path, whose joins implement exactly that."""
+    if small_graph_threshold and edges.schema[src].dataType == edges.schema[dst].dataType:
+        # the local path types its output columns from src's type (closure
+        # composes dst back into src positions, so the types must agree for
+        # the operation to be meaningful anyway). The bounded gate collect
+        # IS the data: one Spark job total when the graph fits.
+        rows = local_rows(edges.select(F.col(src), F.col(dst)), small_graph_threshold)
+        if rows is not None:
             local = _local_tc(edges.sparkSession, rows, edges.schema[src].dataType, src, dst)
             if local is not None:
                 return local
@@ -127,40 +127,15 @@ _LOCAL_TC_MAX_PAIRS = 500_000
 
 
 def _local_tc(spark, rows, dt, src: str, dst: str) -> DataFrame | None:
-    """Driver-side closure for gate-collected graphs (BFS per source) —
-    the caller already holds every edge (bounded by the small-graph gate's
-    ``limit(threshold+1).collect()``), so closing locally costs ZERO extra
+    """Driver-side closure over the gate's rows (BFS per source) — the
+    caller already holds every edge, so closing locally costs zero extra
     Spark jobs and returns a single-slice driver-local frame (cheap to
-    broadcast downstream).
-    Returns ``None`` when the closed pair set exceeds
-    :data:`_LOCAL_TC_MAX_PAIRS` (caller runs the distributed path).
-
-    The null algebra mirrors the distributed path's SQL join semantics
-    exactly: a NULL endpoint is carried OUTWARD through compositions whose
-    shared key is non-null — (NULL,y)∘(y,z) = (NULL,z), (w,x)∘(x,NULL) =
-    (w,NULL), and (NULL,y)…(x,NULL) = (NULL,NULL) — but a path never
-    continues THROUGH a NULL (the join key never matches)."""
-    if any(isinstance(v, float) and v != v for r in rows for v in (r[0], r[1])):
-        # NaN node ids: Python's nan != nan breaks dict/set composition and
-        # diverges from SQL's NaN = NaN join equality — let the distributed
-        # path compare in SQL
-        return None
+    broadcast downstream). Returns ``None`` when the closed pair set exceeds
+    :data:`_LOCAL_TC_MAX_PAIRS` (caller runs the distributed path)."""
     adj: dict = {}
-    s_null: set = set()  # y of (NULL, y) edges
-    d_null: set = set()  # x of (x, NULL) edges
-    both_null = False
-    for r in rows:
-        a, b = r[0], r[1]
-        if a is None and b is None:
-            both_null = True
-        elif a is None:
-            s_null.add(b)
-        elif b is None:
-            d_null.add(a)
-        else:
-            adj.setdefault(a, set()).add(b)
-    reach: dict = {}
-    total = 0
+    for a, b in rows:
+        adj.setdefault(a, set()).add(b)
+    data = []
     for s in adj:
         seen: set = set()
         stack = list(adj[s])
@@ -170,30 +145,8 @@ def _local_tc(spark, rows, dt, src: str, dst: str) -> DataFrame | None:
                 continue
             seen.add(x)
             stack.extend(adj.get(x, ()))
-        reach[s] = seen
-        total += len(seen)
-        if total > _LOCAL_TC_MAX_PAIRS:
+        data.extend((s, x) for x in seen)
+        if len(data) > _LOCAL_TC_MAX_PAIRS:
             return None
-    data = [(s, x) for s, seen in reach.items() for x in seen]
-    # null extensions (dedup via set; they never overlap the non-null pairs)
-    nulls: set = set()
-    for y in s_null:
-        nulls.add((None, y))
-        for z in reach.get(y, ()):
-            nulls.add((None, z))
-    for x in d_null:
-        nulls.add((x, None))
-    for s, seen in reach.items():
-        if not d_null.isdisjoint(seen):
-            nulls.add((s, None))
-    # (NULL, NULL): any (NULL, w) reach meeting a (w, NULL) edge, or a
-    # literal (NULL, NULL) edge
-    s_targets = set(s_null) | {z for y in s_null for z in reach.get(y, ())}
-    if both_null or (s_targets & d_null):
-        nulls.add((None, None))
-    from pyspark.sql.types import StructField, StructType
-
-    from nemo_spark.session import single_slice_frame
-
     schema = StructType([StructField(src, dt), StructField(dst, dt)])
-    return single_slice_frame(spark, data + list(nulls), schema)
+    return single_slice_frame(spark, data, schema)

@@ -12,7 +12,16 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Row, SparkSession
+from pyspark.sql.types import (
+    AnsiIntervalType,
+    BinaryType,
+    BooleanType,
+    DatetimeType,
+    NumericType,
+    StringType,
+    StructType,
+)
 
 
 def get_spark(
@@ -105,6 +114,59 @@ def single_slice_frame(spark, rows, schema):
     out = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     out._nemo_local = True
     return out
+
+
+# column types whose collected Python values are hashable and compare the way
+# Spark compares them (a collated string does not: 'A' = 'a' under UTF8_LCASE)
+_LOCAL_TYPES = (NumericType, BinaryType, BooleanType, DatetimeType, AnsiIntervalType)
+
+
+def _local_type(dt, nested: bool = False) -> bool:
+    if isinstance(dt, StringType):
+        return dt.collation == "UTF8_BINARY"
+    if isinstance(dt, StructType):
+        return not nested and all(_local_type(f.dataType, True) for f in dt.fields)
+    return isinstance(dt, _LOCAL_TYPES)
+
+
+def _declined(c) -> bool:
+    # NULL, or NaN (the one value unequal to itself) directly or in a field
+    return c is None or c != c or (isinstance(c, tuple) and any(v != v for v in c))
+
+
+def local_rows(frame, max_rows: int | None = None) -> list[tuple] | None:
+    """The rows of ``frame`` as hashable tuples for a driver-local fast path,
+    or ``None`` when the caller must run its distributed path instead.
+
+    The one gate shared by the small-graph CC and TC paths and the engine's
+    local stratum. ``max_rows`` bounds the collect at ``max_rows + 1`` rows
+    (so a data-sized frame is never materialized on the driver) and declines
+    frames longer than that; ``None`` collects the frame whole, for callers
+    that already passed their own count gate.
+
+    The single fallback policy: every column must be atomic or a struct of
+    atomic fields (arrays, maps and the like collect as unhashable or
+    differently-compared Python values), and no cell may be NULL or NaN —
+    SQL never joins NULL to NULL but Python's ``None == None`` does, and SQL
+    joins NaN to NaN where Python's ``nan != nan`` does not. A NULL inside a
+    struct cell is fine: struct equality treats it like Python does. Struct
+    cells come back as plain tuples.
+
+    Local results are built with :func:`single_slice_frame`, whose
+    ``_nemo_local`` tag stays: pipeline stages skip re-checkpointing tagged
+    frames, and the benchmark's tracer reads the tag from CC and TC outputs
+    to count which path ran."""
+    if not all(_local_type(f.dataType) for f in frame.schema.fields):
+        return None
+    if max_rows is not None:
+        frame = frame.limit(max_rows + 1)
+    rows = frame.collect()
+    if max_rows is not None and len(rows) > max_rows:
+        return None
+    rows = [tuple(tuple(c) if isinstance(c, Row) else c for c in r) for r in rows]
+    if any(_declined(c) for r in rows for c in r):
+        return None
+    return rows
 
 
 def _parallelism_of(master: str) -> int:

@@ -792,25 +792,6 @@ def test_runner_run_is_idempotent(spark):
         assert r.table("q").count() == 1
 
 
-def test_local_path_declines_null_cells(spark):
-    # SQL-NULL cells have no local-evaluator equivalent (None == None would
-    # join where SQL NULL never matches): a stratum over a NULL-celled EDB
-    # table must fall to the distributed path and produce Spark semantics
-    from nemo_spark import Atom, Program, Rule, SemiNaiveEngine, Var
-
-    X, Y = Var("X"), Var("Y")
-    prog = Program(rules=[Rule(Atom("h", X), [Atom("r", X, Y)])])
-    for threshold in (100_000, 0):  # local-eligible vs forced-distributed
-        eng = SemiNaiveEngine(spark, local_stratum_threshold=threshold)
-        eng.register("r", spark.createDataFrame([(1, None), (None, 5), (2, 3)], "a int, b int"))
-        eng.run(prog)
-        got = {tuple(r) for r in eng.table("h").collect()}
-        # row (1, NULL): head var X=1 is non-null -> h(1) survives (Spark
-        # keeps it; only NULL HEAD cells drop). row (NULL, 5): X=NULL -> drops.
-        assert got == {(1,), (2,)}, (threshold, got)
-        eng.close()
-
-
 def test_local_fixpoint_overflow_fires_before_materializing(spark):
     # the cartesian budget must trip while BUILDING bindings, not after the
     # full quadratic list is in driver memory

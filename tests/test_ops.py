@@ -576,9 +576,17 @@ def test_small_graph_gates_require_matching_types(spark):
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     mixed = edges.selectExpr("src", "CAST(dst AS STRING) AS dst")
-    # same-typed input under threshold -> single task path, correct closure
-    got = {(r.src, r.dst) for r in transitive_closure(edges).collect()}
-    assert got == {(1, 2), (1, 3), (2, 3)}
+    # same-typed input under threshold -> single task path, correct closure;
+    # array keys collect as unhashable lists -> the gate declines them
+    arrays = spark.createDataFrame([([1], [2]), ([2], [3])], "src array<int>, dst array<int>")
+    for threshold in (10_000, 0):
+        got = {(r.src, r.dst) for r in transitive_closure(edges, small_graph_threshold=threshold).collect()}
+        assert got == {(1, 2), (1, 3), (2, 3)}, threshold
+        got = {
+            (tuple(r.src), tuple(r.dst))
+            for r in transitive_closure(arrays, small_graph_threshold=threshold).collect()
+        }
+        assert got == {((1,), (2,)), ((1,), (3,)), ((2,), (3,))}, threshold
     # mixed types: must not crash in the fast path (falls back distributed;
     # Spark coerces the join keys)
     out = transitive_closure(mixed)
@@ -678,15 +686,86 @@ def test_cc_null_endpoints_normalized(spark):
     edge drops; no bogus NULL node row on either path."""
     from nemo_spark.kg.canonicalize import connected_components
 
-    edges = spark.createDataFrame(
-        [(1, 2), (3, None), (None, None)], "src int, dst int"
-    )
-    for threshold in (100_000, 0):
-        got = {
-            (r.node, r.component)
-            for r in connected_components(edges, small_graph_threshold=threshold).collect()
-        }
-        assert got == {(1, 1), (2, 1), (3, 3)}, threshold
+    cases = [
+        (
+            spark.createDataFrame([(1, 2), (3, None), (None, None)], "src int, dst int"),
+            {(1, 1), (2, 1), (3, 3)},
+        ),
+        # array keys collect as unhashable lists -> the gate declines them
+        (
+            spark.createDataFrame(
+                [([1], [2]), ([3], None), (None, None)], "src array<int>, dst array<int>"
+            ),
+            {((1,), (1,)), ((2,), (1,)), ((3,), (3,))},
+        ),
+        # a NULL struct field sorts first in Spark; Python cannot order it
+        (
+            spark.createDataFrame(
+                [((1, None), (1, 2))], "src struct<a:int,b:int>, dst struct<a:int,b:int>"
+            ),
+            {((1, None), (1, None)), ((1, 2), (1, None))},
+        ),
+    ]
+
+    def key(v):
+        return tuple(v) if isinstance(v, (list, tuple)) else v
+
+    for edges, want in cases:
+        for threshold in (100_000, 0):
+            got = {
+                (key(r.node), key(r.component))
+                for r in connected_components(edges, small_graph_threshold=threshold).collect()
+            }
+            assert got == want, (threshold, got)
+
+
+def test_local_path_declines_null_cells(spark):
+    # SQL-NULL cells have no local-evaluator equivalent (None == None would
+    # join where SQL NULL never matches): a stratum over a NULL-celled EDB
+    # table must fall to the distributed path and produce Spark semantics
+    from nemo_spark import Atom, Program, Rule, SemiNaiveEngine, Var
+
+    X, Y = Var("X"), Var("Y")
+    nan = float("nan")
+    cases = [
+        # row (1, NULL): head var X=1 is non-null -> h(1) survives (Spark
+        # keeps it; only NULL HEAD cells drop). row (NULL, 5): X=NULL -> drops.
+        (
+            [Rule(Atom("h", X), [Atom("r", X, Y)])],
+            {"r": ([(1, None), (None, 5), (2, 3)], "a int, b int")},
+            {(1,), (2,)},
+        ),
+        # NaN join key: SQL joins NaN = NaN, Python's nan != nan does not
+        (
+            [Rule(Atom("h", X, Y), [Atom("r", X, Y), Atom("s", X)])],
+            {
+                "r": ([(nan, 1.0), (2.0, 2.0)], "a double, b double"),
+                "s": ([(nan,), (2.0,)], "a double"),
+            },
+            {("nan", 1.0), (2.0, 2.0)},
+        ),
+        # array cells collect as unhashable lists
+        (
+            [Rule(Atom("h", Y), [Atom("r", X, Y), Atom("s", X)])],
+            {
+                "r": ([([1, 2], 3), ([4], 5)], "a array<int>, b int"),
+                "s": ([([1, 2],)], "a array<int>"),
+            },
+            {(3,)},
+        ),
+    ]
+    for rules, tables, want in cases:
+        runs = []
+        for threshold in (100_000, 0):  # local-eligible vs forced-distributed
+            eng = SemiNaiveEngine(spark, local_stratum_threshold=threshold)
+            for name, (rows, schema) in tables.items():
+                eng.register(name, spark.createDataFrame(rows, schema))
+            eng.run(Program(rules=rules))
+            runs.append(
+                {tuple("nan" if c != c else c for c in r) for r in eng.table("h").collect()}
+            )
+            eng.close()
+        assert runs == [want, want], (tables, runs)
 
 
 def test_tokens_whitespace_runs(spark):
@@ -882,18 +961,13 @@ def test_langid_preserves_existing_count_columns(spark):
 
 
 def test_cc_unconverged_raises_loudly(spark):
-    # hash-min on a diameter-5 chain with max_rounds=2: returning
+    # star CC on a 7-node chain with max_rounds=1: returning
     # still-changing labels would be silent corruption — must raise
     from nemo_spark.kg.canonicalize import connected_components
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
     with pytest.raises(ValueError, match="did not converge"):
-        connected_components(
-            chain, method="hashmin", small_graph_threshold=0, max_rounds=2
-        ).collect()
-    # a typo'd method fails up front, even on small-graph inputs
-    with pytest.raises(ValueError, match="unknown cc method"):
-        connected_components(chain, method="hash-min")
+        connected_components(chain, small_graph_threshold=0, max_rounds=1).collect()
 
 
 def test_broadcast_cache_hits_on_value_equal_string_ids(spark):
