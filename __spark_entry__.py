@@ -1181,9 +1181,11 @@ SELECT vec_id, ROUND(score, 6) AS score FROM scored ORDER BY score DESC, vec_id 
 
 
 def _kg_link_scored_sql() -> str:
-    """DuckDB replica of link_scored + best_candidate: first-char blocking,
-    char-3gram Jaccard >= 0.5, best = max score then min entity_id."""
-    from nemo_spark.kg.extract import TRIPLE_RE
+    """DuckDB replica of link_scored + best_candidate over the subject alias
+    of EVERY relation occurrence (extract_triples_pandas semantics):
+    first-char blocking, char-3gram Jaccard >= 0.5, best = max score then
+    min entity_id."""
+    from nemo_spark.kg.extract import MENTION_RE
     from nemo_spark.kg.transcripts import ALIAS_DICT_CTES, TRANSCRIPTS_SQL
 
     grams = (
@@ -1193,9 +1195,8 @@ def _kg_link_scored_sql() -> str:
     return f"""
 WITH {ALIAS_DICT_CTES},
 ext AS (
-  SELECT DISTINCT regexp_extract(text, '{TRIPLE_RE}', 1) AS mention
+  SELECT DISTINCT unnest(regexp_extract_all(text, '{MENTION_RE}', 1)) AS mention
   FROM ({TRANSCRIPTS_SQL})
-  WHERE regexp_extract(text, '{TRIPLE_RE}', 1) <> ''
 ),
 mg AS (SELECT mention, {grams.format(c="mention")} AS g, substr(mention, 1, 1) AS blk FROM ext),
 ag AS (SELECT alias, entity_id, {grams.format(c="alias")} AS g, substr(alias, 1, 1) AS blk FROM ad),

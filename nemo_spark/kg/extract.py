@@ -2,22 +2,28 @@
 
 nemo analogy: this is our EDB "import" stage — raw text becomes ternary
 (subj, pred, obj) facts, like nemo's DSV/RDF readers turn files into
-predicates (``nemo/src/io/formats/``). Two implementations:
+predicates (``nemo/src/io/formats/``).
 
-- :func:`extract_triples_expr` — pure Catalyst (regexp), whole-stage codegen,
-  zero Python. FIRST sentence-anchored match per turn only (``TRIPLE_RE``
-  is ^-anchored) — identical to the pandas path on the synthetic corpus
-  (one leading relation per turn) but NOT on free text with mid-turn or
-  multiple relations.
-- :func:`extract_triples_pandas` — vectorized Arrow-batched ``mapInPandas``
-  (the general path for arbitrary mention detectors; NO per-row Python —
-  regex is applied per Arrow batch via pandas ``str.extractall``): EVERY
-  occurrence in the turn, anywhere in the text.
+One relation grammar (``_ALIAS_RE``/``_PREDS_RE`` below), one kernel per
+match semantics, each a single Arrow-batched Python<->JVM crossing:
 
-Scale notes: extraction is embarrassingly parallel per turn. We repartition by
-(conv_id, turn_idx) — NOT conv_id alone — so the planted hot conversation
-(~30% of rows) cannot pin a single task; the per-conversation ordering
-invariant doesn't need co-location here, only the window check does.
+- **All occurrences** anywhere in the turn — :func:`extract_triples_pandas`
+  (``str.extractall``; pyarrow has no all-occurrence extract kernel). Serves
+  ``kg_extract``, ``kg_linked`` and ``kg_link_scored``; the DuckDB oracles
+  mirror it with ``regexp_extract_all``.
+- **First match anywhere** in the turn (unanchored) — everything else: the
+  pipeline's two RE2 projections :func:`extract_turn_features_arrow` (per-turn
+  features) and :func:`extract_alias_triples_arrow` (per-batch-distinct
+  triples), and the span kernel :func:`extract_mentions_pandas`
+  (``kg_mentions``). :func:`extract_turn_features_pandas` is kept only as the
+  reference the Arrow features kernel is tested against.
+
+Every pattern has ASCII semantics (``[0-9]`` digits, ``re.ASCII`` for
+``\\b``): RE2 (``pyarrow.compute``, DuckDB) reads ``\\d``/``\\b`` as ASCII, so
+the Python ``re`` kernels must too, or non-ASCII text (``entity_٣``,
+``leçon``) splits the kernels from each other and from their oracles.
+
+Extraction is a pure map stage per turn: no shuffle, no repartition.
 """
 
 from __future__ import annotations
@@ -29,15 +35,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nemo_spark.kg.transcripts import TRIPLE_RE
-
 # the relation grammar, defined ONCE — every regex below derives from these
 # two pieces so adding a predicate or alias prefix updates all extractors
 # and (via MENTION_RE import) the DuckDB oracles together
-_ALIAS_RE = r"(?:entity_|ent-|E\.)\d+"
+_ALIAS_RE = r"(?:entity_|ent-|E\.)[0-9]+"
 _PREDS_RE = r"works_at|located_in|part_of"
 
-# all-occurrences pattern for the general extractor (not only sentence-initial)
 MENTION_RE = rf"({_ALIAS_RE}) ({_PREDS_RE}) ({_ALIAS_RE}) \."
 # named-group form (pyarrow extract_regex names its struct fields from these)
 NAMED_MENTION_RE = (
@@ -49,29 +52,9 @@ TRIPLES_RAW_SCHEMA = (
 )
 
 
-def extract_triples_expr(transcripts: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, subj_alias, pred, obj_alias) via Catalyst regexp."""
-    t = F.col("text")
-    out = transcripts.select(
-        "conv_id",
-        "turn_idx",
-        F.regexp_extract(t, TRIPLE_RE, 1).alias("subj_alias"),
-        F.regexp_extract(t, TRIPLE_RE, 2).alias("pred"),
-        F.regexp_extract(t, TRIPLE_RE, 3).alias("obj_alias"),
-    )
-    return out.filter(F.col("subj_alias") != "")
-
-
-def extract_triples_pandas(
-    transcripts: DataFrame, repartition_on: tuple[str, ...] | None = None
-) -> DataFrame:
-    """General extractor: every relation-sentence occurrence in the text,
-    via Arrow-batched pandas (vectorized ``str.extractall``).
-
-    ``repartition_on``: pass e.g. ("conv_id", "turn_idx") when the source
-    layout is conversation-clustered (Iceberg partitioned by conv_id) so the
-    hot conversation spreads across tasks; leave None when the source is
-    already evenly split (extraction is then a pure map stage, no shuffle)."""
+def extract_triples_pandas(transcripts: DataFrame) -> DataFrame:
+    """Every relation-sentence occurrence in the text, via Arrow-batched
+    pandas (vectorized ``str.extractall``)."""
     pattern = re.compile(MENTION_RE)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -87,39 +70,7 @@ def extract_triples_pandas(
             yield pd.concat([keys, hits.reset_index(drop=True)], axis=1)
 
     cols = transcripts.select("conv_id", "turn_idx", "text")
-    if repartition_on:
-        cols = cols.repartition(*[F.col(c) for c in repartition_on])
     return cols.mapInPandas(extract, schema=TRIPLES_RAW_SCHEMA)
-
-
-ARROW_TRIPLE_RE = "^" + NAMED_MENTION_RE
-
-
-def extract_triples_arrow(transcripts: DataFrame) -> DataFrame:
-    """Arrow-native extractor: ``mapInArrow`` + ``pyarrow.compute.extract_regex``
-    (RE2 in C++). No Python objects are materialized per row — unlike the
-    pandas path, whose object-dtype strings saturate memory bandwidth before
-    CPUs are busy. Same output as :func:`extract_triples_pandas` for
-    sentence-initial relation sentences (the corpus contract)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def extract(batches):
-        for batch in batches:
-            hits = pc.extract_regex(batch.column("text"), pattern=ARROW_TRIPLE_RE)
-            tbl = pa.table(
-                {
-                    "conv_id": batch.column("conv_id"),
-                    "turn_idx": batch.column("turn_idx"),
-                    "subj_alias": pc.struct_field(hits, "subj_alias"),
-                    "pred": pc.struct_field(hits, "pred"),
-                    "obj_alias": pc.struct_field(hits, "obj_alias"),
-                }
-            ).filter(hits.is_valid())
-            yield from tbl.to_batches()
-
-    cols = transcripts.select("conv_id", "turn_idx", "text")
-    return cols.mapInArrow(extract, schema=TRIPLES_RAW_SCHEMA)
 
 
 TURN_FEATURES_SCHEMA = (
@@ -144,15 +95,16 @@ def _with_fp(transcripts: DataFrame) -> DataFrame:
         F.xxhash64(F.coalesce(F.col("text"), F.lit(""))).alias("fp"),
     )
 
-_STOPWORD_RE = re.compile(r"\b(?:the|a|of|and|to|in|is|it|for|on)\b")
-_MENTION_ONLY_RE = re.compile(r"(?:entity_|ent-|E\.)\d+")
+# re.ASCII: the Arrow kernel hands ``.pattern`` to RE2, whose \b is ASCII
+_STOPWORD_RE = re.compile(r"\b(?:the|a|of|and|to|in|is|it|for|on)\b", re.ASCII)
+_MENTION_ONLY_RE = re.compile(_ALIAS_RE, re.ASCII)
 # tiny language-ID: per-language function-word densities (heuristic n-gram
 # langid, the classic training-pipeline pre-filter)
 _LANG_RES = {
-    "en": re.compile(r"\b(?:the|and|of|to|is|that|with)\b"),
-    "es": re.compile(r"\b(?:el|la|de|que|y|los|por)\b"),
-    "de": re.compile(r"\b(?:der|die|und|das|ist|nicht|mit)\b"),
-    "fr": re.compile(r"\b(?:le|la|et|les|des|est|pour)\b"),
+    "en": re.compile(r"\b(?:the|and|of|to|is|that|with)\b", re.ASCII),
+    "es": re.compile(r"\b(?:el|la|de|que|y|los|por)\b", re.ASCII),
+    "de": re.compile(r"\b(?:der|die|und|das|ist|nicht|mit)\b", re.ASCII),
+    "fr": re.compile(r"\b(?:le|la|et|les|des|est|pour)\b", re.ASCII),
 }
 
 
@@ -160,13 +112,9 @@ def extract_turn_features_pandas(transcripts: DataFrame) -> DataFrame:
     """One-pass per-turn extraction: relation triple + mention count + token /
     stopword counts + quality ratio + language-ID + content fingerprint.
 
-    This is the pipeline's production extractor: at 100 TB you only get to
-    stream the text once, so relation extraction, mention detection, quality
-    scoring, language-ID and the dedup fingerprint share a single Arrow pass
-    (per-batch vectorized pandas). The stage is compute-heavy per byte, so it
-    scales with cores instead of saturating memory bandwidth — this is the
-    stage where real pipelines spend their CPU (NER, tokenizers), and its
-    outputs feed the downstream dedup / quality-filter / linking operators."""
+    The pandas/Python-``re`` reference for :func:`extract_turn_features_arrow`
+    (the pipeline's kernel), which ``test_feature_extractors_identical``
+    compares it against value for value; nothing else calls it."""
     triple_pat = re.compile(MENTION_RE)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -211,8 +159,8 @@ def extract_turn_features_pandas(transcripts: DataFrame) -> DataFrame:
 
 def extract_turn_features_arrow(transcripts: DataFrame) -> DataFrame:
     """Arrow-native one-pass feature extractor — same columns and VALUES as
-    :func:`extract_turn_features_pandas` (A/B-verified ``exceptAll`` empty
-    both ways on the synthetic corpus), ~2x faster at 2M turns (measured
+    :func:`extract_turn_features_pandas` (``exceptAll`` empty both ways in
+    ``test_feature_extractors_identical``), ~2x faster at 2M turns (measured
     0.94 s vs 1.94 s per pass at local[32]).
 
     Why: the pandas path runs seven Python-regex passes over object-dtype
@@ -220,9 +168,9 @@ def extract_turn_features_arrow(transcripts: DataFrame) -> DataFrame:
     regex executes in RE2 through ``pyarrow.compute`` C++ kernels
     (``extract_regex`` / ``count_substring_regex``) with no per-row Python
     and no GIL contention — the patterns use only RE2-safe constructs
-    (alternation, ``\\d``, ``\\b``). The content fingerprint is computed
-    JVM-side and forwarded (:func:`_with_fp`) so both extractors stay
-    drop-in interchangeable with zero Python-object materialization."""
+    (alternation, ``[0-9]``, ASCII ``\\b``). The content fingerprint is
+    computed JVM-side and forwarded (:func:`_with_fp`) with zero
+    Python-object materialization."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -322,44 +270,6 @@ def extract_alias_triples_arrow(transcripts: DataFrame) -> DataFrame:
     return transcripts.select("text").mapInArrow(extract, schema=ALIAS_TRIPLES_SCHEMA)
 
 
-REDUCED_TRIPLES_SCHEMA = "subj_alias string, pred string, obj_alias string, n long"
-
-
-def extract_triples_reduced_pandas(transcripts: DataFrame, min_quality: float = 0.0) -> DataFrame:
-    """Triples path at scale: the same one-pass per-turn computation as
-    :func:`extract_turn_features_pandas` (quality gate included), but the
-    python side MAP-SIDE PRE-AGGREGATES: each Arrow batch returns its distinct
-    (subj_alias, pred, obj_alias) with a count instead of per-turn rows.
-
-    Set semantics make this exact (the engine dedups globally afterwards);
-    the return transfer drops from O(turns) to O(distinct triples per batch) —
-    the python→JVM path stops being a bandwidth wall. This is the UDF analogue
-    of Spark's partial aggregation."""
-    triple_pat = re.compile(MENTION_RE)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            t = pdf["text"]
-            hits = t.str.extract(triple_pat)
-            hits.columns = ["subj_alias", "pred", "obj_alias"]
-            if min_quality > 0.0:
-                n_tokens = t.str.count(" ").add(1)
-                n_stop = t.str.count(_STOPWORD_RE)
-                quality = (n_stop / n_tokens).clip(0.0, 1.0)
-                hits = hits[quality >= min_quality]
-            hits = hits[hits["subj_alias"].notna()]
-            if hits.empty:
-                continue
-            yield hits.groupby(["subj_alias", "pred", "obj_alias"], as_index=False).size().rename(
-                columns={"size": "n"}
-            )
-
-    cols = transcripts.select("text")
-    return cols.mapInPandas(extract, schema=REDUCED_TRIPLES_SCHEMA)
-
-
 MENTIONS_SCHEMA = "conv_id string, turn_idx int, mention string, span_start int, span_end int"
 
 # MENTION_RE with an explicit lazy prefix group: ``re.search(MENTION_RE, s)``
@@ -422,19 +332,3 @@ def extract_mentions_pandas(transcripts: DataFrame) -> DataFrame:
             yield out.drop(columns=["_i", "_g"])
 
     return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(extract, schema=MENTIONS_SCHEMA)
-
-
-EXTRACT_SQL_TEMPLATE = """
-SELECT conv_id, turn_idx,
-       regexp_extract(text, '{re}', 1) AS subj_alias,
-       regexp_extract(text, '{re}', 2) AS pred,
-       regexp_extract(text, '{re}', 3) AS obj_alias
-FROM ({transcripts})
-WHERE regexp_extract(text, '{re}', 1) <> ''
-"""
-
-
-def extract_sql(transcripts_sql: str) -> str:
-    """DuckDB oracle for :func:`extract_triples_expr` over a transcripts SQL."""
-    # DuckDB standard string literals keep backslashes verbatim: no escaping
-    return EXTRACT_SQL_TEMPLATE.format(re=TRIPLE_RE, transcripts=transcripts_sql)

@@ -9,11 +9,7 @@ correctness corpus is small; at scale only the Spark side runs.
 
 from __future__ import annotations
 
-from nemo_spark.kg.extract import (  # noqa: F401 (TRIPLE_RE kept for callers)
-    _MENTION_SPAN_RE,
-    MENTION_RE,
-    TRIPLE_RE,
-)
+from nemo_spark.kg.extract import _MENTION_SPAN_RE, MENTION_RE
 from nemo_spark.kg.transcripts import ALIAS_DICT_CTES, ALIAS_DICT_SQL, TRANSCRIPTS_SQL
 
 # the EXACT prefix-capture pattern the mentions extractor compiles — one

@@ -30,12 +30,7 @@ from pyspark.sql import functions as F
 from nemo_spark.engine.checkpoint import CheckpointStore
 from nemo_spark.kg import transcripts as T
 from nemo_spark.kg.canonicalize import canonical_map_from_alias_dict
-from nemo_spark.kg.extract import (
-    extract_triples_expr,
-    extract_triples_pandas,
-    extract_turn_features_arrow,
-    extract_turn_features_pandas,
-)
+from nemo_spark.kg.extract import extract_turn_features_arrow
 
 
 @dataclass
@@ -52,7 +47,6 @@ def run_pipeline(
     transcripts: DataFrame,
     alias_dict: DataFrame | None = None,
     checkpoint_store: CheckpointStore | None = None,
-    extractor: str = "features",  # features | features_pandas | pandas | arrow | expr | reduced
     transitive_preds: tuple[str, ...] = ("located_in",),
 ) -> PipelineResult:
     metrics: dict = {}
@@ -82,34 +76,11 @@ def run_pipeline(
 
     alias_dict = alias_dict if alias_dict is not None else T.alias_dict(spark)
 
-    # 1. extract — default: the one-pass per-turn feature extractor
-    # (triples + mentions + quality + langid + dedup fingerprint), in its
-    # Arrow/RE2 form (~2x the pandas variant, identical output — A/B in
-    # tests/test_ops.py::test_feature_extractors_identical)
-    def _reduced():
-        from nemo_spark.kg.extract import extract_triples_reduced_pandas
-
-        return extract_triples_reduced_pandas
-
-    def _arrow():
-        from nemo_spark.kg.extract import extract_triples_arrow
-
-        return extract_triples_arrow
-
-    extract_fns = {
-        "features": lambda: extract_turn_features_arrow,
-        "features_pandas": lambda: extract_turn_features_pandas,
-        "pandas": lambda: extract_triples_pandas,
-        "expr": lambda: extract_triples_expr,
-        "reduced": _reduced,
-        "arrow": _arrow,
-    }
-    if extractor not in extract_fns:
-        raise ValueError(
-            f"unknown extractor {extractor!r}: choose from {sorted(extract_fns)}"
-        )
-    extract_fn = extract_fns[extractor]()
-    triples_raw = stage("triples_raw", lambda: extract_fn(transcripts), 1)
+    # 1. extract — the one-pass per-turn feature kernel (triple + mention
+    # count + quality + langid + dedup fingerprint) in Arrow/RE2. Looked up
+    # through this module's global at call time, so a wrapper patched onto
+    # ``pipeline.extract_turn_features_arrow`` sees the call
+    triples_raw = stage("triples_raw", lambda: extract_turn_features_arrow(transcripts), 1)
 
     # 2+3. canonical map: CC over the (alias, entity) bipartite graph.
     # The alias dictionary is dimension-sized, so the canonical map is small
@@ -127,7 +98,7 @@ def run_pipeline(
         # dedup BEFORE the joins: the alias-level distinct is a map-side
         # partial aggregate that shrinks O(turns) rows to O(|alias triples|),
         # so the canonical joins and final dedup touch only dimension-sized data
-        if checkpoint_store is None and extractor == "features":
+        if checkpoint_store is None:
             # project early THROUGH the opaque extractor (r7): this stage
             # consumes only the three alias columns, but mapInArrow defeats
             # column pruning — selecting them from the full feature
@@ -137,7 +108,8 @@ def run_pipeline(
             # and returns per-batch-distinct triples; triples_raw stays the
             # lazily-computed full feature table for consumers that ask.
             # With a checkpoint_store, triples_raw is already materialized —
-            # reading the snapshot beats re-extracting.
+            # reading the snapshot beats re-extracting. Imported at call
+            # time so a wrapper patched onto the extract module sees it.
             from nemo_spark.kg.extract import extract_alias_triples_arrow
 
             # no alias-level dropDuplicates here: the extractor already

@@ -34,9 +34,6 @@ ROLES = ["user", "assistant", "tool"]
 HOT_CONV_FRACTION_MOD = 10  # doc_id % 10 < 3 => hot conversation
 N_CONVS = 97
 
-# one planted sentence at the head of each turn's text
-TRIPLE_RE = r"^((?:entity_|ent-|E\.)\d+) (works_at|located_in|part_of) ((?:entity_|ent-|E\.)\d+) \."
-
 
 def _alias_expr(variant, k):
     """Spark expr: alias string for entity-index col k under variant col."""

@@ -2,8 +2,8 @@
 
 Ground truth is computed in pure Python from the deterministic generator
 arithmetic (tests/ = the 'reference engine' role; the corpus plants known
-triples), covering: per-turn text invariant, extraction parity (pandas UDF vs
-Catalyst expr), canonicalization (Spark CC vs union-find), final triple
+triples), covering: per-turn text invariant, extraction parity (all-occurrence
+vs first-match kernel), canonicalization (Spark CC vs union-find), final triple
 set, fixpoint closure (vs Python transitive closure), and mid-run resume.
 """
 
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from nemo_spark.engine.checkpoint import CheckpointStore
 from nemo_spark.kg import transcripts as T
-from nemo_spark.kg.extract import extract_triples_expr, extract_triples_pandas
+from nemo_spark.kg.extract import extract_triples_pandas, extract_turn_features_arrow
 from nemo_spark.kg.pipeline import materialized_triples, run_pipeline
 
 N_TURNS = 600
@@ -101,9 +101,15 @@ def test_per_turn_text_invariant(spark):
 
 
 def test_extractors_agree(spark):
+    """One planted relation per turn: the all-occurrence kernel and the
+    pipeline's first-match kernel return the same triples."""
     t = T.synth_transcripts(spark, N_TURNS)
-    a = extract_triples_expr(t)
-    b = extract_triples_pandas(t)
+    a = extract_triples_pandas(t)
+    b = (
+        extract_turn_features_arrow(t)
+        .where(F.col("subj_alias").isNotNull())
+        .select("conv_id", "turn_idx", "subj_alias", "pred", "obj_alias")
+    )
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
     assert a.count() == N_TURNS  # one planted triple per turn
 

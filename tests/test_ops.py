@@ -437,7 +437,7 @@ def test_turn_features_keep_non_relation_turns(spark):
     """The one-pass feature extractor keeps a row per turn — quality/langid/
     fingerprint features of turns WITHOUT a relation sentence must survive
     (they feed dedup and quality filtering); triple columns are null."""
-    from nemo_spark.kg.extract import extract_turn_features_pandas
+    from nemo_spark.kg.extract import extract_turn_features_arrow
 
     tr = spark.createDataFrame(
         [
@@ -446,7 +446,7 @@ def test_turn_features_keep_non_relation_turns(spark):
         ],
         "conv_id string, turn_idx int, text string",
     )
-    out = extract_turn_features_pandas(tr).collect()
+    out = extract_turn_features_arrow(tr).collect()
     assert len(out) == 2
     by_idx = {r.turn_idx: r for r in out}
     assert by_idx[0].subj_alias == "entity_1"
@@ -474,6 +474,10 @@ def test_feature_extractors_identical(spark):
             ("e", 3, "E.9 part_of E.10 . der und das ist"),
             ("e", 4, None),  # null text = empty turn on BOTH paths
             ("e", 5, ""),
+            # non-ASCII word chars and digits: RE2 reads \b and \d as ASCII,
+            # so the Python-re reference must too
+            ("e", 6, "ça va, une leçon"),
+            ("e", 7, "entity_٣ works_at ent-2 ."),
         ],
         "conv_id string, turn_idx int, text string",
     )
@@ -986,11 +990,3 @@ def test_broadcast_cache_hits_on_value_equal_string_ids(spark):
     c = _broadcast_cached(spark, np.asarray(["f1", "f2"], dtype=object), vecs)
     assert c is not a  # different ids, same vectors -> distinct broadcast
     _BC_CACHE.clear()
-
-
-def test_pipeline_unknown_extractor_raises(spark):
-    from nemo_spark.kg.pipeline import run_pipeline
-    from nemo_spark.kg.transcripts import synth_transcripts
-
-    with pytest.raises(ValueError, match="unknown extractor"):
-        run_pipeline(spark, synth_transcripts(spark, 100), extractor="features-pandas")

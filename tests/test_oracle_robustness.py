@@ -22,6 +22,9 @@ def tricky_docs(spark, tmp_path):
         (1, "prefix words entity_3 works_at ent-4 . suffix"),
         (2, "E.5 part_of E.6 . and then ent-7 located_in entity_8 . tail"),
         (3, "the el der le ties"),
+        # non-ASCII digit and word chars: `entity_٣` is no alias in RE2's
+        # (and therefore every kernel's) ASCII grammar
+        (4, "digits entity_٣ works_at ent-2 . ça va"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     path = str(tmp_path / "documents.parquet")
@@ -45,9 +48,9 @@ def test_extract_oracle_all_occurrences(spark, tricky_docs):
     want = sorted(tuple(r) for r in con.sql(KG_EXTRACT).fetchall())
     assert got == want
     # the interesting shape is present: transcripts plant one relation per
-    # turn (4) and the doc bodies add 3 more occurrences — turns with
+    # turn (5) and the doc bodies add 3 more occurrences — turns with
     # MULTIPLE matches are exercised
-    assert len(got) == 7
+    assert len(got) == 8
 
 
 def test_mentions_oracle_true_spans(spark, tricky_docs):
@@ -77,3 +80,15 @@ def test_linked_oracle_all_occurrences(spark, tricky_docs):
     got = _spark_rows(link_exact(ext, alias_dict(spark), mention_col="subj_alias"))
     want = sorted(tuple(r) for r in con.sql(KG_LINKED).fetchall())
     assert got == want
+
+
+def test_link_scored_oracle_all_occurrences(spark, tricky_docs, tmp_path):
+    """kg_link_scored links the subject alias of EVERY occurrence, so the
+    mid-text aliases of doc 2 (E.5, ent-7) must be scored on both sides."""
+    import __spark_entry__ as entry
+
+    _, con = tricky_docs
+    got = _spark_rows(entry.queries()["kg_link_scored"](spark, str(tmp_path)))
+    want = sorted(tuple(r) for r in con.sql(entry.oracle_sql()["kg_link_scored"]).fetchall())
+    assert got == want
+    assert {"E.5", "ent-7"} <= {r[0] for r in got}
