@@ -14,6 +14,10 @@ Key mapping decisions:
   ``nemo-physical/src/tabular/operations/join.rs:196``). Small deltas are
   broadcast explicitly (row counts are already materialized for termination
   checks, so the decision is free).
+- EDB relations are materialized once at registration (deduplicated,
+  eagerly ``localCheckpoint``-ed), as nemo loads each import once
+  (``nemo/src/execution/execution_engine.rs`` ``add_imports``); only deltas
+  and rule bodies stay lazy.
 - Set semantics / dedup vs history = ``dropDuplicates`` + ``left_anti`` join
   against the accumulated table — THE hot operator of semi-naive.
 - Plan-lineage control: iterative jobs grow logical plans without bound;
@@ -119,7 +123,7 @@ class SemiNaiveEngine:
     Usage::
 
         eng = SemiNaiveEngine(spark)
-        eng.register("edge", edge_df)          # EDB: any DataFrame, any col names
+        eng.register("edge", edge_df)          # EDB: any DataFrame, any col names; materialized once
         eng.run(program)
         result = eng.table("reach")            # columns c0..c{n-1}
     """
@@ -267,7 +271,18 @@ class SemiNaiveEngine:
         self.close()
 
     def register(self, pred: str, df: DataFrame) -> None:
-        """Register an EDB table; columns are positional (renamed c0..cn-1)."""
+        """Register an EDB table; columns are positional (renamed c0..cn-1).
+
+        The deduplicated relation is materialized once, here, as an eager
+        ``localCheckpoint`` (memory-and-disk blocks, like every IDB table the
+        engine holds) — nemo likewise loads each import once into an
+        in-memory table and then only joins it
+        (``nemo/src/execution/execution_engine.rs`` ``add_imports``). Rule
+        applications read that snapshot instead of re-running the source
+        (a file scan, an import parser, the dedup shuffle) each time, and
+        later changes to the source are not seen. Trade-off: a constant in a
+        rule atom over a parquet-backed EDB no longer pushes into the file
+        scan; it filters the materialized rows instead."""
         if pred in self._deferred:
             # a deferred import's rows would silently vanish behind the
             # registered table (rule eval checks _tables first) — reject,
@@ -286,7 +301,7 @@ class SemiNaiveEngine:
         # (extend()'s non-monotone reset maintains the same invariant)
         self._provenance = [rec for rec in self._provenance if rec[0] != pred]
         n = len(df.columns)
-        df = df.toDF(*_cols(n)).dropDuplicates()
+        df = df.toDF(*_cols(n)).dropDuplicates().localCheckpoint(eager=True)
         self._tables[pred] = df
         # base (non-derived) facts: the restore point for non-monotone
         # resets — popping the whole table would delete registered EDB rows
@@ -751,7 +766,14 @@ class SemiNaiveEngine:
                 # then max(merge) instead of sum(merge). The single-threaded
                 # reference applies one rule at a time; this is the distributed
                 # engine's structural win on wide programs.
+                # Pool threads start with empty Spark local properties (pinned
+                # thread mode): each submission gets its own
+                # inheritable_thread_target clone of the caller's properties
+                # and tags, so merges keep the caller's job group and pool
+                # without one merge's properties leaking into a sibling's.
                 from concurrent.futures import ThreadPoolExecutor
+
+                from pyspark.util import inheritable_thread_target
 
                 def do_merge(item):
                     hp, derived = item
@@ -762,7 +784,11 @@ class SemiNaiveEngine:
                 items = list(per_pred.items())
                 if len(items) > 1:
                     with ThreadPoolExecutor(max_workers=min(len(items), 12)) as ex:
-                        results = list(ex.map(do_merge, items))
+                        futures = [
+                            ex.submit(inheritable_thread_target(self.spark)(do_merge), i)
+                            for i in items
+                        ]
+                        results = [f.result() for f in futures]
                 else:
                     results = [do_merge(i) for i in items]
                 for hp, fresh, cnt, wall in results:

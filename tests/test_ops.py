@@ -990,3 +990,63 @@ def test_broadcast_cache_hits_on_value_equal_string_ids(spark):
     c = _broadcast_cached(spark, np.asarray(["f1", "f2"], dtype=object), vecs)
     assert c is not a  # different ids, same vectors -> distinct broadcast
     _BC_CACHE.clear()
+
+
+def _reach_seen_program():
+    from nemo_spark.model.rules import Atom, Program, Rule, Var
+
+    X, Y, Z = Var("x"), Var("y"), Var("z")
+    return Program(
+        rules=[
+            Rule(head=Atom("reach", X, Y), body=[Atom("edge", X, Y)]),
+            Rule(head=Atom("reach", X, Z), body=[Atom("reach", X, Y), Atom("edge", Y, Z)]),
+            Rule(head=Atom("seen", X, Y), body=[Atom("reach", X, Y)]),
+        ]
+    )
+
+
+_CHAIN_EDGES = [(i, i + 1) for i in range(1, 7)]
+_CHAIN_REACH = {(i, j) for i in range(1, 7) for j in range(i + 1, 8)}
+
+
+def test_register_evaluates_edb_once(spark):
+    # nemo loads an import once and then only joins it: the registered
+    # frame's source (here a tapped Python operator standing in for an
+    # import parser) must run once, not once per rule application
+    from nemo_spark.engine.seminaive import SemiNaiveEngine
+
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for b in batches:
+            rows_read.add(len(b))
+            yield b
+
+    edge = spark.createDataFrame(_CHAIN_EDGES, "a long, b long").mapInPandas(tap, "a long, b long")
+    with SemiNaiveEngine(spark, local_stratum_threshold=0) as eng:
+        eng.register("edge", edge)
+        eng.run(_reach_seen_program())
+        assert {(r.c0, r.c1) for r in eng.table("reach").collect()} == _CHAIN_REACH
+        assert {(r.c0, r.c1) for r in eng.table("seen").collect()} == _CHAIN_REACH
+    assert rows_read.value == len(_CHAIN_EDGES)
+
+
+def test_run_keeps_callers_job_group(spark):
+    # round-1 merges of reach and seen run on pool threads: each must carry
+    # the caller's job group, or sc.cancelJobGroup cannot reach its jobs
+    from nemo_spark.engine.seminaive import SemiNaiveEngine
+
+    sc = spark.sparkContext
+    sc.setJobGroup("nemo-caller-group", "engine run under a caller's group")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        with SemiNaiveEngine(spark, local_stratum_threshold=0) as eng:
+            eng.register("edge", spark.createDataFrame(_CHAIN_EDGES, "a long, b long"))
+            eng.run(_reach_seen_program())
+            assert {(r.c0, r.c1) for r in eng.table("seen").collect()} == _CHAIN_REACH
+        escaped = set(sc.statusTracker().getJobIdsForGroup(None)) - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert not escaped, f"{len(escaped)} jobs ran outside the caller's job group"
