@@ -12,6 +12,8 @@ Usage:
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import sys
@@ -54,9 +56,10 @@ def main() -> None:
         os.makedirs(outdir, exist_ok=True)
         for name in names:
             df = qmap[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain(mode="formatted")
+            plan = buf.getvalue()
             with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
                 f.write(plan)
             print(f"wrote {name}")

@@ -1,4 +1,4 @@
-"""Resumable snapshot store with per-partition lineage + metrics.
+"""Resumable snapshot store with per-part-file lineage + metrics.
 
 nemo analogy: nemo tags every derived subtable with its execution step
 (``nemo/src/table_manager.rs:67``) and answers provenance queries from those
@@ -6,6 +6,13 @@ step tags (``nemo/src/execution/tracing/trace.rs``). Here each fixpoint stage
 snapshot is a parquet directory ``<root>/<name>/step=<n>/`` plus lineage rows
 (name, step, partition_id, rows) and a JSON metrics sidecar — so any run can
 resume mid-fixpoint from the latest snapshot.
+
+Like nemo's step tags, the lineage is metadata, not a rescan: a snapshot is
+one parquet write job. Row counts (per part file; ``partition_id`` is the part
+file's index) and the schema of the returned frame come from the new files'
+parquet footers, and the lineage file is written on the driver with pyarrow.
+The store therefore assumes a local filesystem root, as its ``_meta``
+sidecars already do. An empty frame records no lineage rows.
 
 On a cluster with an Iceberg catalog the same interface maps to
 ``df.writeTo(table).createOrReplace()`` / snapshot reads; the parquet layout
@@ -18,10 +25,21 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the frame's schema
+# JSON (ParquetReadSupport.SPARK_METADATA_KEY); schema inference reads it too
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_LINEAGE_SCHEMA = "name string, step int, partition_id int, rows long"
+_LINEAGE_ARROW = pa.schema(
+    [("name", pa.string()), ("step", pa.int32()), ("partition_id", pa.int32()), ("rows", pa.int64())]
+)
 
 
 def _safe_name(name: str) -> str:
@@ -51,27 +69,44 @@ class CheckpointStore:
 
     def snapshot(self, name: str, df: DataFrame, step: int, metrics: dict | None = None) -> DataFrame:
         """Persist ``df`` as snapshot ``step`` of ``name``; record lineage +
-        metrics; return the re-read (lineage-truncated) DataFrame."""
+        metrics; return the re-read (lineage-truncated) DataFrame.
+
+        Runs exactly the Spark jobs of the parquet write and nothing else:
+        each part file's row count and the snapshot's schema come from the
+        parquet footers (Spark stores its schema JSON in every footer), read
+        on the driver, and the lineage file is written from the driver.
+        ``partition_id`` in the lineage rows is the part file's index among
+        the snapshot's sorted part files; only non-empty part files get a
+        row, so an empty frame records no lineage rows and ``rows`` 0."""
         t0 = time.time()
         path = self._path(name, step)
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        # one scan total: collect the per-partition counts, then write the
-        # (tiny) lineage rows from the driver and reuse their sum for the
-        # meta sidecar — a separate out.count() would re-scan the snapshot
-        lineage_rows = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        # one OVERWRITTEN subdirectory per (name, step), not a shared append:
+        # the part files, by the rule Spark's file index uses: names
+        # starting with '_' or '.' (_SUCCESS, .crc checksums) are not data.
+        # Spark writes at least one part file, with its schema key in the
+        # footer, even for an empty frame
+        footers = [
+            pq.read_metadata(os.path.join(path, f))
+            for f in sorted(os.listdir(path))
+            if not f.startswith(("_", "."))
+        ]
+        schema = StructType.fromJson(json.loads(footers[0].metadata[_SPARK_SCHEMA_KEY]))
+        lineage_rows = [
+            {"name": name, "step": step, "partition_id": i, "rows": md.num_rows}
+            for i, md in enumerate(footers)
+            if md.num_rows
+        ]
+        # one REPLACED subdirectory per (name, step), not a shared append:
         # streaming redelivers a batch whose snapshot ran but whose offset
         # never committed, and the re-run must be idempotent — an append
         # would double that step's lineage rows
-        self.spark.createDataFrame(
-            [(name, step, r["partition_id"], r["rows"]) for r in lineage_rows],
-            "name string, step int, partition_id int, rows long",
-        ).coalesce(1).write.mode("overwrite").parquet(self._lineage_path(name, step))
+        lineage_dir = self._lineage_path(name, step)
+        shutil.rmtree(lineage_dir, ignore_errors=True)
+        os.makedirs(lineage_dir)
+        pq.write_table(
+            pa.Table.from_pylist(lineage_rows, schema=_LINEAGE_ARROW),
+            os.path.join(lineage_dir, "part-00000.parquet"),
+        )
         meta = {
             "name": name,
             "step": step,
@@ -82,7 +117,7 @@ class CheckpointStore:
         }
         with open(self._meta_path(name, step), "w") as f:
             json.dump(meta, f)
-        return out
+        return self.spark.read.schema(schema).parquet(path)
 
     def steps(self, name: str) -> list[int]:
         """All COMPLETE snapshot steps of ``name``, ascending (steps need
@@ -142,9 +177,7 @@ class CheckpointStore:
         if not sources:
             # fresh store: no lineage rows yet (read.parquet on an empty
             # directory raises instead of returning an empty frame)
-            return self.spark.createDataFrame(
-                [], "name string, step int, partition_id int, rows long"
-            )
+            return self.spark.createDataFrame([], _LINEAGE_SCHEMA)
         return self.spark.read.parquet(*sources)
 
     def _lineage_path(self, name: str, step: int) -> str:

@@ -179,10 +179,11 @@ def _gv_dbl(dbl_fn, *args) -> float:
     (POW(0.0,-1.0) -> ZeroDivisionError, POW(1e300,2.0) -> OverflowError,
     LOG(-1.0,2.0)/REM(1.0,0.0) -> bare ValueError from math) or return a
     complex (POW(-2.0,0.5)) that Value.double would TypeError on. All map
-    to ValueError_ so the value is simply "no result", like the reference."""
+    to ValueError_ so the value is simply "no result", like the reference.
+    A TypeError is a bug in the branch, not a domain error: it propagates."""
     try:
         r = dbl_fn(*args)
-    except (ValueError, ZeroDivisionError, OverflowError, TypeError) as e:
+    except (ValueError, ZeroDivisionError, OverflowError) as e:
         raise ValueError_(f"float evaluation error: {e}") from None
     if isinstance(r, complex):
         raise ValueError_("complex result")

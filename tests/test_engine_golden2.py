@@ -607,27 +607,6 @@ def test_local_fixpoint_constant_type_mismatch_stays_distributed(spark):
     assert run(0) == run(1_000_000) == ["a"]
 
 
-def test_checkpoint_store_iri_names_and_empty_lineage(spark, tmp_path):
-    """IRI predicate names sanitize into filesystem-safe snapshot paths;
-    lineage() on a fresh store returns an empty frame instead of raising."""
-    from nemo_spark.engine.checkpoint import CheckpointStore
-
-    store = CheckpointStore(str(tmp_path / "ckpt"), spark)
-    assert store.lineage().count() == 0  # fresh store: no lineage yet
-
-    name = "https://example.org/result"
-    df = spark.createDataFrame([(1,), (2,)], "v long")
-    store.snapshot(name, df, 0)
-    assert store.latest_step(name) == 0
-    assert store.load(name).count() == 2
-    assert [m["step"] for m in store.metrics(name)] == [0]
-    # '__'-containing names do not cross-match in metrics
-    store.snapshot("a", df, 1)
-    store.snapshot("a__b", df, 2)
-    assert [m["step"] for m in store.metrics("a")] == [1]
-    assert [m["step"] for m in store.metrics("a__b")] == [2]
-
-
 def test_extend_nonmonotone_restores_base_facts(spark):
     """Non-monotone extend(): registered EDB facts of predicates that are
     ALSO rule heads survive the reset, and previously DERIVED facts of

@@ -245,3 +245,17 @@ def test_ground_float_branch_errors_drop_not_crash(spark):
     """
     run = RlsRunner(spark, source=src).run()
     assert [tuple(x) for x in run.serialized("p").collect()] == [("1",)]
+
+
+def test_ground_float_branch_keeps_type_errors():
+    # only the built-in errors of legal float inputs mean "no result"; a
+    # TypeError inside the float branch is a bug and must not drop the fact
+    import pytest
+
+    from nemo_spark.parser.compile import _gv_dbl
+
+    def buggy(x, y):
+        raise TypeError("unsupported operand")
+
+    with pytest.raises(TypeError, match="unsupported operand"):
+        _gv_dbl(buggy, 1.0, 2.0)

@@ -161,6 +161,11 @@ def test_checkpoint_store_hardening(spark, tmp_path):
 
     store = CheckpointStore(str(tmp_path / "s"), spark)
     df = spark.createDataFrame([(1,), (2,)], "v long")
+    # a store written by an older version holds a Spark-written lineage
+    # directory (uuid part names) for the same (name, step): replaced
+    spark.createDataFrame(
+        [("p", 0, 0, 5)], "name string, step int, partition_id int, rows long"
+    ).write.parquet(store._lineage_path("p", 0))
     store.snapshot("p", df, 0)
     store.snapshot("p", df, 0)  # redelivered batch
     assert store.lineage().groupBy().sum("rows").collect()[0][0] == 2
@@ -175,6 +180,80 @@ def test_checkpoint_store_hardening(spark, tmp_path):
     os.makedirs(str(tmp_path / "s" / "p" / "step=7"))
     with _pytest.raises(ValueError, match="incomplete"):
         store.load("p", 7)
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under its own job group; return how many Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_runs_only_its_write(spark, tmp_path):
+    """A snapshot runs exactly the jobs of a plain parquet write of the same
+    frame: row counts and schema come from the part files' footers and the
+    lineage file is written on the driver."""
+    import datetime
+
+    from nemo_spark.engine.checkpoint import CheckpointStore
+
+    store = CheckpointStore(str(tmp_path / "s"), spark)
+    frames = {
+        "range": spark.range(0, 1000, 1, 4),
+        "repart": spark.range(1000).repartition(7),
+        "empty": spark.createDataFrame([], "v long"),
+    }
+    for name, df in frames.items():
+        plain = str(tmp_path / "plain" / name)
+        want = _jobs_in_group(spark, f"plain-{name}", lambda: df.write.parquet(plain))
+        got = _jobs_in_group(spark, f"snap-{name}", lambda: store.snapshot(name, df, 0))
+        assert got == want, f"{name}: snapshot ran {got} jobs, plain write {want}"
+        rows = store.lineage().where(F.col("name") == name)
+        assert (rows.groupBy().sum("rows").collect()[0][0] or 0) == df.count()
+    assert store.lineage().where(F.col("name") == "empty").count() == 0
+    assert store.metrics("empty")[0]["rows"] == 0
+    assert store.metrics("repart")[0]["rows"] == 1000
+
+    rich = spark.createDataFrame(
+        [
+            (1, [1, None], (None, "x"), datetime.datetime(2024, 1, 2, 3, 4, 5), bytearray(b"\x00\x01")),
+            (2, None, None, None, None),
+        ],
+        "id long not null, xs array<int>, s struct<a:int,b:string>, ts timestamp, bin binary",
+    )
+    out = store.snapshot("rich", rich, 0)
+    reread = spark.read.parquet(store._path("rich", 0))
+    assert out.schema == reread.schema
+    assert out.orderBy("id").collect() == reread.orderBy("id").collect()
+    assert out.orderBy("id").collect() == rich.orderBy("id").collect()
+
+
+def test_checkpoint_store_iri_names_and_empty_lineage(spark, tmp_path):
+    """IRI predicate names sanitize into filesystem-safe snapshot paths;
+    lineage() on a fresh store returns an empty frame instead of raising."""
+    from nemo_spark.engine.checkpoint import CheckpointStore
+
+    store = CheckpointStore(str(tmp_path / "ckpt"), spark)
+    assert store.lineage().count() == 0  # fresh store: no lineage yet
+
+    name = "https://example.org/result"
+    df = spark.createDataFrame([(1,), (2,)], "v long")
+    store.snapshot(name, df, 0)
+    assert store.latest_step(name) == 0
+    assert store.load(name).count() == 2
+    assert [m["step"] for m in store.metrics(name)] == [0]
+    # '__'-containing names do not cross-match in metrics
+    store.snapshot("a", df, 1)
+    store.snapshot("a__b", df, 2)
+    assert [m["step"] for m in store.metrics("a")] == [1]
+    assert [m["step"] for m in store.metrics("a__b")] == [2]
 
 
 def test_nt_bnodes_scoped_per_file(spark, tmp_path):
