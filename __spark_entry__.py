@@ -364,23 +364,22 @@ def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
-    from nemo_spark.ops.dedup import minhash_bands
+    from nemo_spark.ops.dedup import signatures
 
-    return minhash_bands(_t(spark, sf, "documents"))
+    return signatures(_t(spark, sf, "documents")).select("doc_id", "band0", "band1", "band2", "band3")
 
 
 def q_dedup_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    from nemo_spark.ops.dedup import lsh_candidate_pairs
+    from nemo_spark.ops.dedup import lsh_candidate_pairs, signatures
 
-    return lsh_candidate_pairs(_t(spark, sf, "documents"))
+    return lsh_candidate_pairs(signatures(_t(spark, sf, "documents")))
 
 
 def q_dedup_jaccard_verify(spark: SparkSession, sf: str) -> DataFrame:
-    from nemo_spark.ops.dedup import jaccard_verify, lsh_candidate_pairs
+    from nemo_spark.ops.dedup import jaccard_verify, lsh_candidate_pairs, signatures
 
-    docs = _t(spark, sf, "documents")
-    pairs = lsh_candidate_pairs(docs)
-    return jaccard_verify(pairs, docs, threshold=0.5).select(
+    sig = signatures(_t(spark, sf, "documents"))
+    return jaccard_verify(lsh_candidate_pairs(sig), sig, threshold=0.5).select(
         "a", "b", F.round("jaccard", 6).alias("jaccard")
     )
 

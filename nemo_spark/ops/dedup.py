@@ -3,12 +3,14 @@
 All families are DataFrame-native and shuffle-minimal:
 
 - exact:      hash-groupBy on a content digest (one shuffle on the digest)
-- minhash:    token-shingle MinHash signatures, banded for LSH; candidate
-              pairs come from a self-join on (band, band_minhash) buckets —
+- minhash:    one signature table per run (shingles from ONE tokenize
+              pass, banded MinHash, a short-doc key); candidate pairs come
+              from one self-join on its (key index, key value) buckets —
               only bucket-colliding docs ever meet, never O(n^2)
 - simhash:    64-bit per-token-hash bit-majority signature; near-dups share
               signatures or low Hamming distance within buckets
-- ngram jaccard: exact verification of LSH candidates (array_intersect/union)
+- ngram jaccard: exact verification of LSH candidates over the signature
+              table's shingle arrays (array_intersect/union)
 
 Hash function choice: md5 (not xxhash) for anything oracle-checked — md5 is
 bit-identical across Spark, DuckDB and Python, making every operator
@@ -16,6 +18,8 @@ cross-engine verifiable. Swap to xxhash64 for pure-Spark production speed.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -79,10 +83,19 @@ def _band_min(shingles: Column, b: int) -> Column:
     ).alias(f"band{b}")
 
 
-def minhash_bands(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bands: int = 4, k: int = 3) -> DataFrame:
-    # materialize the shingle array in its own projection FIRST: inlining it
-    # into every band expression would re-split the text per element access
-    # (observed 20x slowdown)
+def signatures(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bands: int = 4, k: int = 3
+) -> DataFrame:
+    """The one tokenize pass of a near-dup run: (``id_col``, shingles,
+    band0..band{bands-1}, short), lazily localCheckpoint'ed so candidate
+    generation and verification both read it instead of the input.
+
+    ``short`` is md5(normalized text) for docs with fewer than ``k`` tokens:
+    their shingle set is EMPTY, every band minhash is NULL and no band can
+    propose them, so byte-identical short docs pair on it instead (only
+    truly identical short docs match; near-miss short docs are below the
+    shingle resolution by definition). It is NULL for every other doc."""
+    from nemo_spark.ops.text import normalized
     from nemo_spark.session import fan_out
 
     # shingle + per-band md5 are interpreted higher-order expressions —
@@ -90,63 +103,41 @@ def minhash_bands(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # single-split source (one small parquet file / one unsplittable blob)
     # would pin all of it to one core; fan_out is a no-op once the source
     # has >= cores splits. Measured 1.29s -> 0.42s on the bench corpus.
-    sh = fan_out(df).select(F.col(id_col), token_shingles(F.col(text_col), k).alias("__sh"))
-    return sh.select(F.col(id_col), *[_band_min(F.col("__sh"), b) for b in range(bands)])
-
-
-def lsh_candidate_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bands: int = 4, k: int = 3
-) -> DataFrame:
-    """(a, b) candidate near-dup pairs: docs sharing any band minhash.
-    Self-join per band on the band value — bucket sizes bound the work.
-
-    Docs with fewer than ``k`` tokens have EMPTY shingle sets, so every band
-    minhash is NULL and the band equi-joins can never propose them — without
-    a fallback, byte-identical short docs would silently never dedup. They
-    pair on exact whitespace-normalized text instead (so only truly
-    identical short docs match; near-miss short docs are below the shingle
-    resolution by definition).
-
-    The signature table is localCheckpoint'ed before the per-band joins:
-    each band join references it on both sides, so the lazy plan would
-    re-run tokenize+shingle+minhash 2*bands times over the full input."""
-    from nemo_spark.session import fan_out
-
-    # one fan-out feeds both the signature build and the short-doc pass
-    # (minhash_bands' own gate then sees enough splits and adds nothing)
-    df = fan_out(df)
-    sig = minhash_bands(df, id_col, text_col, bands, k).localCheckpoint(eager=False)
-    pairs = None
-    for b in range(bands):
-        left = sig.select(F.col(id_col).alias("a"), F.col(f"band{b}").alias("__v"))
-        right = sig.select(F.col(id_col).alias("b"), F.col(f"band{b}").alias("__v"))
-        p = left.join(right, on="__v").filter(F.col("a") < F.col("b")).select("a", "b")
-        pairs = p if pairs is None else pairs.unionByName(p)
-    from nemo_spark.ops.text import normalized
-
-    short = df.select(
-        F.col(id_col), F.md5(F.encode(normalized(F.col(text_col)), "UTF-8")).alias("__sk")
-    ).filter(F.size(tokens(F.col(text_col))) < k)
-    sp = (
-        short.select(F.col(id_col).alias("a"), "__sk")
-        .join(short.select(F.col(id_col).alias("b"), "__sk"), on="__sk")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
+    # The shingle array gets its own projection FIRST: inlining it into
+    # every band expression would re-split the text per element access
+    # (observed 20x slowdown).
+    sh = fan_out(df).select(
+        F.col(id_col), F.col(text_col), token_shingles(F.col(text_col), k).alias("shingles")
     )
-    return pairs.unionByName(sp).dropDuplicates()
+    short = F.md5(F.encode(normalized(F.col(text_col)), "UTF-8"))
+    return sh.select(
+        F.col(id_col),
+        F.col("shingles"),
+        *[_band_min(F.col("shingles"), b) for b in range(bands)],
+        F.when(F.size("shingles") == 0, short).alias("short"),
+    ).localCheckpoint(eager=False)
+
+
+def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(a, b) candidate near-dup pairs over a :func:`signatures` table: docs
+    sharing any band minhash or the short-doc key. Every band and the short
+    key explode into (key index, key value) rows, NULL keys dropped, and ONE
+    self-join on that pair proposes them — bucket sizes bound the work."""
+    cols = [c for c in sig.columns if re.fullmatch(r"band\d+", c)] + ["short"]
+    keys = F.array(*[F.struct(F.lit(i).alias("ki"), F.col(c).alias("kv")) for i, c in enumerate(cols)])
+    ex = sig.select(F.col(id_col), F.inline(keys)).filter(F.col("kv").isNotNull())
+    a = ex.select(F.col(id_col).alias("a"), "ki", "kv")
+    b = ex.select(F.col(id_col).alias("b"), "ki", "kv")
+    return a.join(b, on=["ki", "kv"]).filter(F.col("a") < F.col("b")).select("a", "b").distinct()
 
 
 def jaccard_verify(
-    pairs: DataFrame, df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3, threshold: float = 0.8
+    pairs: DataFrame, sig: DataFrame, id_col: str = "doc_id", threshold: float = 0.8
 ) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs; keeps pairs >= threshold."""
-    from nemo_spark.session import fan_out
-
-    sh = fan_out(df).select(
-        F.col(id_col).alias("__id"), token_shingles(F.col(text_col), k).alias("__sh")
-    )
-    a = sh.select(F.col("__id").alias("a"), F.col("__sh").alias("__sa"))
-    b = sh.select(F.col("__id").alias("b"), F.col("__sh").alias("__sb"))
+    """Exact n-gram Jaccard over candidate pairs, from the shingle arrays of
+    the :func:`signatures` table; keeps pairs >= threshold."""
+    a = sig.select(F.col(id_col).alias("a"), F.col("shingles").alias("__sa"))
+    b = sig.select(F.col(id_col).alias("b"), F.col("shingles").alias("__sb"))
     j = (
         pairs.join(a, on="a").join(b, on="b")
         .withColumn(
@@ -181,15 +172,16 @@ def dedup_clusters(
 
     This closes the dedup workflow: pairwise near-dup detection alone
     over-deletes (A~B and B~C without A~C must still collapse to ONE kept
-    doc, not two independent pair decisions). Scale path end to end: pairs
-    come from the banded LSH self-join (never all-pairs), the component
-    step is the O(log n) alternating-star CC, and the final membership map
-    is a left join — no stage is quadratic."""
+    doc, not two independent pair decisions). Scale path end to end: one
+    :func:`signatures` table feeds both the banded LSH self-join (never
+    all-pairs) and the Jaccard verify, the component step is the O(log n)
+    alternating-star CC, and the final membership map is a left join — no
+    stage is quadratic. The input is read twice: once for the signatures,
+    once for the membership map."""
     from nemo_spark.kg.canonicalize import connected_components
 
-    pairs = jaccard_verify(
-        lsh_candidate_pairs(df, id_col, text_col, bands), df, id_col, text_col, k, threshold
-    )
+    sig = signatures(df, id_col, text_col, bands, k)
+    pairs = jaccard_verify(lsh_candidate_pairs(sig, id_col), sig, id_col, threshold)
     comp = connected_components(
         pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     ).withColumnRenamed("node", id_col)

@@ -11,6 +11,7 @@ Scale rationale (100 TB / 1000-executor design, tested on local[N]):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import Row, SparkSession
 from pyspark.sql.types import (
@@ -73,6 +74,10 @@ def get_spark(
     return b.getOrCreate()
 
 
+# a shuffle exchange node in a plan tree string; BroadcastExchange is not one
+_SHUFFLE = re.compile(r"^[ :|+-]*Exchange\b", re.M)
+
+
 def fan_out(df, min_parallelism: int | None = None):
     """Spread a narrow scan across the cores: when the frame's physical
     partitioning is below the session's default parallelism, round-robin
@@ -89,12 +94,14 @@ def fan_out(df, min_parallelism: int | None = None):
     RepartitionOperation; verified in the scan's PushedFilters)."""
     spark = df.sparkSession
     p = min_parallelism or spark.sparkContext.defaultParallelism
-    # only gate NARROW plans (scan/map chains): on a frame with an upstream
-    # exchange, materializing .rdd to read its partition count EXECUTES the
-    # shuffle stages as their own job under AQE (measured: a groupBy
-    # frame's getNumPartitions ran the full stage), and post-shuffle width
-    # is governed by spark.sql.shuffle.partitions / AQE anyway
-    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+    # only gate plans without a SHUFFLE exchange: on a frame with an
+    # upstream shuffle, materializing .rdd to read its partition count
+    # EXECUTES the shuffle stages as their own job under AQE (measured: a
+    # groupBy frame's getNumPartitions ran the full stage), and post-shuffle
+    # width is governed by spark.sql.shuffle.partitions / AQE anyway. A
+    # broadcast join keeps its stream side's width, so it is gated too
+    # (reading that width runs only the small broadcast job).
+    if _SHUFFLE.search(df._jdf.queryExecution().executedPlan().toString()):
         return df
     if df.rdd.getNumPartitions() < p:
         return df.repartition(p)

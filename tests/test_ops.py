@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nemo_spark.kg.link import best_candidate, jaccard, char_ngrams, link_embedding, link_scored
-from nemo_spark.ops.dedup import exact_dedup, jaccard_verify, lsh_candidate_pairs, simhash64
+from nemo_spark.ops.dedup import exact_dedup, jaccard_verify, lsh_candidate_pairs, signatures, simhash64
 from nemo_spark.ops.graph import transitive_closure
 from nemo_spark.ops.similarity import brute_force_topk, bucketed_topk, cosine, pandas_cosine_scores
 
@@ -131,10 +131,11 @@ def test_jaccard_verify_known_pair(spark):
     a = "w1 w2 w3 w4 w5 w6"
     b = "w1 w2 w3 w4 w5 zz"  # shares 3 of (4+4-3)? shingles: a has 4, b has 4, common 3
     df = spark.createDataFrame([(1, a), (2, b), (3, "x y z q r s")], ["doc_id", "text"])
-    pairs = lsh_candidate_pairs(df)
+    sig = signatures(df)
+    pairs = lsh_candidate_pairs(sig)
     got = {(r.a, r.b) for r in pairs.collect()}
     assert (1, 2) in got
-    j = {(r.a, r.b): r.jaccard for r in jaccard_verify(pairs, df, threshold=0.0).collect()}
+    j = {(r.a, r.b): r.jaccard for r in jaccard_verify(pairs, sig, threshold=0.0).collect()}
     assert abs(j[(1, 2)] - 3 / 5) < 1e-9
 
 
@@ -549,14 +550,14 @@ def test_cc_nan_endpoints_use_sql_semantics(spark):
 def test_jaccard_verify_empty_shingles(spark):
     """Identical docs shorter than k tokens (empty shingle sets) must score
     1.0, not NULL (which silently dropped true duplicates)."""
-    from nemo_spark.ops.dedup import jaccard_verify
+    from nemo_spark.ops.dedup import jaccard_verify, signatures
 
     docs = spark.createDataFrame(
         [(1, "hi"), (2, "hi"), (3, "completely different text right here")],
         "doc_id long, text string",
     )
     pairs = spark.createDataFrame([(1, 2)], "a long, b long")
-    out = jaccard_verify(pairs, docs, k=3, threshold=0.8).collect()
+    out = jaccard_verify(pairs, signatures(docs, k=3), threshold=0.8).collect()
     assert [(r.a, r.b, r.jaccard) for r in out] == [(1, 2, 1.0)]
 
 
@@ -920,7 +921,7 @@ def test_lsh_short_docs_pair_on_exact_text(spark):
     # docs under k tokens have empty shingles (all band minhashes NULL), so
     # band joins can never propose them; byte-identical short docs must
     # still pair (exact-normalized-text fallback), different ones must NOT
-    from nemo_spark.ops.dedup import dedup_clusters, jaccard_verify, lsh_candidate_pairs
+    from nemo_spark.ops.dedup import dedup_clusters, jaccard_verify, lsh_candidate_pairs, signatures
 
     df = spark.createDataFrame(
         [
@@ -931,14 +932,62 @@ def test_lsh_short_docs_pair_on_exact_text(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = {(r.a, r.b) for r in lsh_candidate_pairs(df).collect()}
+    sig = signatures(df)
+    pairs = {(r.a, r.b) for r in lsh_candidate_pairs(sig).collect()}
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
     # the verified pair survives (empty-vs-empty shingles => jaccard 1.0)
-    verified = {(r.a, r.b) for r in jaccard_verify(lsh_candidate_pairs(df), df).collect()}
+    verified = {(r.a, r.b) for r in jaccard_verify(lsh_candidate_pairs(sig), sig).collect()}
     assert (1, 2) in verified and all(3 not in p for p in verified)
     clusters = {r.doc_id: r.cluster_id for r in dedup_clusters(df).collect()}
     assert clusters == {1: 1, 2: 1, 3: 3, 4: 4}
+
+
+def test_lsh_adversarial_texts(spark):
+    # NULL, empty, whitespace-only, sub-k, exactly-k, non-ASCII and
+    # near-miss rows through candidates, verify and clusters: empty and
+    # whitespace-only texts normalize to "" and pair on the short key, NULL
+    # text has neither shingles nor a short key and stays a singleton
+    from nemo_spark.ops.dedup import dedup_clusters
+
+    texts = [None, None, "", "", "   ", "a b", "a  b", "a b c", "a b c", "a b c d",
+             "x y z w v u t s", "x y z w v u t q", "ça va très bien merci",
+             "ça va très bien merci", "\n\t", "solo"]
+    df = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id long, text string")
+    sig = signatures(df)
+    cand = lsh_candidate_pairs(sig)
+    want = {(3, 4), (3, 5), (3, 15), (4, 5), (4, 15), (5, 15), (6, 7), (8, 9), (8, 10),
+            (9, 10), (11, 12), (13, 14)}
+    assert sorted(map(tuple, cand.collect())) == sorted(want)
+    scores = {(r.a, r.b): r.jaccard for r in jaccard_verify(cand, sig, threshold=0.5).collect()}
+    assert set(scores) == want
+    assert scores[(8, 10)] == scores[(9, 10)] == 0.5
+    assert abs(scores[(11, 12)] - 5 / 7) < 1e-12
+    assert all(v == 1.0 for p, v in scores.items() if p not in {(8, 10), (9, 10), (11, 12)})
+    clusters = {r.doc_id: r.cluster_id for r in dedup_clusters(df, threshold=0.5).collect()}
+    assert clusters == {1: 1, 2: 2, 3: 3, 4: 3, 5: 3, 6: 6, 7: 6, 8: 8, 9: 8, 10: 8,
+                        11: 11, 12: 11, 13: 13, 14: 13, 15: 3, 16: 16}
+
+
+def test_dedup_clusters_reads_input_twice(spark):
+    # one read builds the signature table (shingles, bands, short key) that
+    # both candidate generation and verification use; one more read is the
+    # membership join. Any re-tokenizing pass shows up as extra tapped rows
+    from nemo_spark.ops.dedup import dedup_clusters
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    rows = [(i, f"family {i // 4} shared words here and doc {i % 3}") for i in range(40)]
+    rows += [(40, "hi"), (41, "hi"), (42, None), (43, "")]
+    src = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = src.mapInPandas(tap, src.schema)
+    assert len(dedup_clusters(docs, threshold=0.5).collect()) == 44
+    assert seen.value <= 2 * 44
 
 
 def test_fingerprint_edge_whitespace_invariant(spark):
@@ -1050,3 +1099,16 @@ def test_run_keeps_callers_job_group(spark):
         sc.setLocalProperty("spark.job.description", None)
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
     assert not escaped, f"{len(escaped)} jobs ran outside the caller's job group"
+
+
+def test_fan_out_widens_broadcast_join(spark):
+    # a broadcast hash join keeps its stream side's width, so a one-slice
+    # stream stays one task wide unless fan_out spreads it; only a SHUFFLE
+    # exchange (whose width AQE governs) makes fan_out leave a frame alone
+    from nemo_spark.session import fan_out
+
+    p = spark.sparkContext.defaultParallelism
+    joined = spark.range(0, 1000, 1, 1).join(F.broadcast(spark.range(0, 10, 1, 1)), "id")
+    assert fan_out(joined).rdd.getNumPartitions() == p
+    grouped = spark.range(0, 1000, 1, 2).groupBy((F.col("id") % 7).alias("k")).count()
+    assert fan_out(grouped) is grouped
