@@ -15,7 +15,7 @@ Key mapping decisions:
   broadcast explicitly (row counts are already materialized for termination
   checks, so the decision is free).
 - EDB relations are materialized once at registration (deduplicated,
-  eagerly ``localCheckpoint``-ed), as nemo loads each import once
+  ``localCheckpoint``-ed and counted), as nemo loads each import once
   (``nemo/src/execution/execution_engine.rs`` ``add_imports``); only deltas
   and rule bodies stay lazy.
 - Set semantics / dedup vs history = ``dropDuplicates`` + ``left_anti`` join
@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from nemo_spark.engine.stratify import stratify
 from nemo_spark.model.rules import Aggregate, Atom, EVar, Program, Rule, Var
+from nemo_spark.session import run_concurrently
 
 log = logging.getLogger("nemo_spark.engine")
 
@@ -272,8 +273,14 @@ class SemiNaiveEngine:
 
     def register(self, pred: str, df: DataFrame) -> None:
         """Register an EDB table; columns are positional (renamed c0..cn-1).
+        Shorthand for ``register_all({pred: df})``."""
+        self.register_all({pred: df})
 
-        The deduplicated relation is materialized once, here, as an eager
+    def register_all(self, frames: dict[str, DataFrame]) -> None:
+        """Register EDB tables ``{pred: df}``; columns are positional
+        (renamed c0..cn-1).
+
+        Each deduplicated relation is materialized once, here, as a
         ``localCheckpoint`` (memory-and-disk blocks, like every IDB table the
         engine holds) — nemo likewise loads each import once into an
         in-memory table and then only joins it
@@ -282,34 +289,45 @@ class SemiNaiveEngine:
         (a file scan, an import parser, the dedup shuffle) each time, and
         later changes to the source are not seen. Trade-off: a constant in a
         rule atom over a parquet-backed EDB no longer pushes into the file
-        scan; it filters the materialized rows instead."""
-        if pred in self._deferred:
-            # a deferred import's rows would silently vanish behind the
-            # registered table (rule eval checks _tables first) — reject,
-            # mirroring the idb-head check in run()
-            raise ValueError(
-                f"predicate {pred} is a deferred import; register() would shadow it"
-            )
-        tbl = self._history_tables.pop(pred, None)
-        if tbl is not None:
-            # the old history is part of the REPLACED state: keeping it would
-            # suppress re-registered rows as "not fresh" and resurrect old
-            # facts on the next bucketed merge
-            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        scan; it filters the materialized rows instead.
+
+        Validation and engine bookkeeping run on the calling thread; only
+        the materializations (a lazy checkpoint and its ``count()``, one
+        per relation) are submitted together (:func:`run_concurrently`)."""
+        for pred in frames:
+            if pred in self._deferred:
+                # a deferred import's rows would silently vanish behind the
+                # registered table (rule eval checks _tables first) — reject,
+                # mirroring the idb-head check in run()
+                raise ValueError(
+                    f"predicate {pred} is a deferred import; register() would shadow it"
+                )
+        for pred in frames:
+            tbl = self._history_tables.pop(pred, None)
+            if tbl is not None:
+                # the old history is part of the REPLACED state: keeping it
+                # would suppress re-registered rows as "not fresh" and
+                # resurrect old facts on the next bucketed merge
+                self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         # stale derivation records are also replaced state: trace_fact would
         # otherwise report rules for facts the new table no longer holds
         # (extend()'s non-monotone reset maintains the same invariant)
-        self._provenance = [rec for rec in self._provenance if rec[0] != pred]
-        n = len(df.columns)
-        df = df.toDF(*_cols(n)).dropDuplicates().localCheckpoint(eager=True)
-        self._tables[pred] = df
-        # base (non-derived) facts: the restore point for non-monotone
-        # resets — popping the whole table would delete registered EDB rows
-        # of predicates that are also rule heads
-        self._base_tables[pred] = df
-        self._arity[pred] = n
-        self._schemas[pred] = df.schema
-        self._table_counts[pred] = df.count()
+        self._provenance = [rec for rec in self._provenance if rec[0] not in frames]
+
+        def materialize(item):
+            pred, df = item
+            df = df.toDF(*_cols(len(df.columns))).dropDuplicates().localCheckpoint(eager=False)
+            return pred, df, df.count()
+
+        for pred, df, cnt in run_concurrently(self.spark, materialize, frames.items()):
+            self._tables[pred] = df
+            # base (non-derived) facts: the restore point for non-monotone
+            # resets — popping the whole table would delete registered EDB
+            # rows of predicates that are also rule heads
+            self._base_tables[pred] = df
+            self._arity[pred] = len(df.columns)
+            self._schemas[pred] = df.schema
+            self._table_counts[pred] = cnt
 
     def register_deferred(self, pred: str, loader: Any, arity: int) -> None:
         """Register a binding-pushdown deferred import (reference:
@@ -766,31 +784,13 @@ class SemiNaiveEngine:
                 # then max(merge) instead of sum(merge). The single-threaded
                 # reference applies one rule at a time; this is the distributed
                 # engine's structural win on wide programs.
-                # Pool threads start with empty Spark local properties (pinned
-                # thread mode): each submission gets its own
-                # inheritable_thread_target clone of the caller's properties
-                # and tags, so merges keep the caller's job group and pool
-                # without one merge's properties leaking into a sibling's.
-                from concurrent.futures import ThreadPoolExecutor
-
-                from pyspark.util import inheritable_thread_target
-
                 def do_merge(item):
                     hp, derived = item
                     t0 = time.time()
                     fresh, cnt = self._merge(hp, derived)
                     return hp, fresh, cnt, time.time() - t0
 
-                items = list(per_pred.items())
-                if len(items) > 1:
-                    with ThreadPoolExecutor(max_workers=min(len(items), 12)) as ex:
-                        futures = [
-                            ex.submit(inheritable_thread_target(self.spark)(do_merge), i)
-                            for i in items
-                        ]
-                        results = [f.result() for f in futures]
-                else:
-                    results = [do_merge(i) for i in items]
+                results = run_concurrently(self.spark, do_merge, per_pred.items())
                 for hp, fresh, cnt, wall in results:
                     self._record(
                         stratum_idx, round_idx, "+".join(per_pred_rules[hp]), cnt,

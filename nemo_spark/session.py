@@ -176,6 +176,29 @@ def local_rows(frame, max_rows: int | None = None) -> list[tuple] | None:
     return rows
 
 
+def run_concurrently(spark, fn, items) -> list:
+    """``[fn(item) for item in items]``, the calls submitted together as
+    concurrent Spark jobs from driver threads (in order when there is at most
+    one item). Independent jobs then cost max(job) instead of sum(job).
+
+    Pool threads start with empty Spark local properties (pinned thread
+    mode): each submission gets its own ``inheritable_thread_target`` clone
+    of the caller's properties, created on the calling thread, so every job
+    keeps the caller's job group, description and scheduler pool without one
+    call's properties leaking into a sibling's (one wrapper shared across
+    submissions would share one clone)."""
+    items = list(items)
+    if len(items) <= 1:
+        return [fn(item) for item in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=min(len(items), 12)) as ex:
+        futures = [ex.submit(inheritable_thread_target(spark)(fn), item) for item in items]
+        return [f.result() for f in futures]
+
+
 def _parallelism_of(master: str) -> int:
     if master.startswith("local["):
         inner = master[len("local[") : -1]

@@ -11,24 +11,42 @@ Replicates nemo's DSV reader semantics exactly
 - ``ignore_headers``: drop the first record of each file
 - gzip transparently (Spark text source decompresses ``.gz``)
 
-Implementation: ``spark.read.text`` + Arrow-batched ``mapInPandas`` running a
-csv-dialect field splitter per batch. This is the same architecture as any
-distributed text-format decoder (Spark's own CSV datasource is per-line
-parsing behind columnar batches); header rows are identified scalably via
-``input_file_name``/``input_file_block_start`` (no driver-side read, no
-global sort). For plain machine-typed CSV at scale prefer
-:mod:`nemo_spark.sources.dsv` (native Spark CSV reader + Catalyst decode).
+Two decoders over ``spark.read.text`` lines:
+
+- **Catalyst** (no Python worker): when every format is ``int``, ``double``,
+  ``string`` or ``skip`` and ``ignore_headers`` is off. Each line splits on
+  the literal delimiter; ``int`` cells of the shape ``[+-]?[0-9]{1,18}``
+  and ``double`` cells of the decimal/exponent shape are cast, ``string``
+  cells pass unchanged, and rows with a non-finite double are skipped (as
+  ``Value.double`` does).
+- **Python** (Arrow-batched ``mapInPandas`` running a csv-dialect field
+  splitter and the ``parse_dsv_*`` value parsers per batch): everything
+  else. Header rows are identified scalably via
+  ``input_file_name``/``input_file_block_start`` (no driver-side read, no
+  global sort). Quoted records with embedded newlines go to the per-file
+  ``wholetext`` reader.
+
+One probe job per file picks the decoder. For a Catalyst-eligible format
+list it looks for a quote character (when quoting is on) or a right-arity
+cell outside its format's shape — such a file goes to the Python reader
+unchanged — and, in the same job, for a line with an odd quote count (the
+multiline case). Other format lists probe only for the odd quote count.
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Iterator
+from functools import reduce
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nemo_spark.model.values import (
+    T_DOUBLE,
+    T_INT,
+    T_STRING,
     VALUE_SCHEMA,
     Value,
     ValueError_,
@@ -45,6 +63,19 @@ _PARSERS = {
     "int": parse_dsv_int,
     "integer": parse_dsv_int,
     "double": parse_dsv_double,
+}
+
+# the cell shapes the Catalyst decoder casts (Java regex, whole cell: \z, not
+# $, which also matches before a trailing line terminator such as U+2028).
+# 18 digits always fit a bigint; a longer integer, surrounding whitespace,
+# non-ASCII digits, nan/inf or a Java-only "1.0d" suffix sends the file to
+# the Python parsers, which decide it as nemo does.
+_SHAPES = {
+    "int": r"^[+-]?[0-9]{1,18}\z",
+    "integer": r"^[+-]?[0-9]{1,18}\z",
+    "double": r"^[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?\z",
+    "string": None,
+    "skip": None,
 }
 
 
@@ -65,7 +96,7 @@ def read_dsv_typed(
     would shred them into two skipped fragments). ``'auto'`` (default)
     probes for an odd-quote-count line and switches to the per-file reader
     only when one exists, so clean data keeps the splittable line path; pass
-    ``False`` to skip the probe scan when the data is known single-line, or
+    ``False`` to skip that check when the data is known single-line, or
     ``True`` to force the per-file reader."""
     import csv as _csv
 
@@ -74,23 +105,44 @@ def read_dsv_typed(
     total = len(formats)
     out_schema = ", ".join(f"c{j} {VALUE_SCHEMA}" for j in range(len(keep)))
 
-    src = spark.read.text(path).select(
+    lines = spark.read.text(path)
+    probe_odd = quoting and multiline == "auto"
+    whole = quoting and multiline not in (False, "auto")
+    catalyst = bool(keep) and not ignore_headers and all(f in _SHAPES for f in formats)
+    if not whole and (catalyst or probe_odd):
+        fields = F.split(F.col("value"), _literal_regex(delimiter))
+        # a record that continues past its line has an ODD number of quote
+        # chars on the break line; single-line records always balance
+        nq = F.length("value") - F.length(F.replace(F.col("value"), F.lit('"'), F.lit("")))
+        odd = nq % 2 == 1
+        hit = odd if probe_odd else F.lit(False)
+        if catalyst:
+            shaped = [
+                F.get(fields, i).rlike(_SHAPES[f])
+                for i, f in enumerate(formats)
+                if _SHAPES[f] is not None
+            ]
+            if shaped:
+                right_arity = (F.col("value") != "") & (F.size(fields) == total)
+                hit = hit | (right_arity & ~reduce(operator.and_, shaped))
+            if quoting:
+                hit = hit | F.col("value").contains('"')
+        # ONE job: a top-1 sort scans every partition in a single pass, where
+        # limit(1) would scan in growing waves of jobs; odd lines sort first
+        first = lines.where(hit).select(odd.alias("odd")).orderBy(F.desc("odd")).limit(1).collect()
+        whole = probe_odd and bool(first) and first[0].odd
+        if catalyst and not first:
+            return _decode_catalyst(lines, fields, formats, total)
+    if whole:
+        return _read_dsv_whole_files(
+            spark, path, parsers, keep, total, delimiter, ignore_headers, out_schema
+        )
+
+    src = lines.select(
         "value",
         F.input_file_name().alias("__f"),
         F.input_file_block_start().alias("__o"),
     )
-
-    if quoting and multiline != False:  # noqa: E712  ('auto' is truthy)
-        if multiline == "auto":
-            # a record that continues past its line has an ODD number of
-            # quote chars on the break line; single-line records always
-            # balance. limit(1) short-circuits on the first hit.
-            nq = F.length("value") - F.length(F.replace(F.col("value"), F.lit('"'), F.lit("")))
-            multiline = not src.where(nq % 2 == 1).limit(1).isEmpty()
-        if multiline:
-            return _read_dsv_whole_files(
-                spark, path, parsers, keep, total, delimiter, ignore_headers, out_schema
-            )
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # the header is the first NON-BLANK record (the csv crate skips
@@ -133,6 +185,36 @@ def read_dsv_typed(
             yield pd.DataFrame({f"c{j}": pd.Series(cols[j], dtype="object") for j in range(len(keep))})
 
     return src.mapInPandas(parse, schema=out_schema)
+
+
+def _literal_regex(delimiter: str) -> str:
+    # a backslash before any non-alphanumeric character is a literal in Java
+    # regex; letters and digits are literals as they stand
+    return "".join(c if c.isalnum() else "\\" + c for c in delimiter)
+
+
+def _decode_catalyst(lines: DataFrame, fields: Column, formats: list[str], total: int) -> DataFrame:
+    """The Catalyst decoder, for a file whose probe found no quote character
+    and no right-arity cell outside its shape: blank and wrong-arity lines
+    drop, shaped cells cast, rows with a non-finite double drop. The result
+    has the Python reader's exact schema (nullable structs and fields)."""
+    rows = lines.where(F.col("value") != "").select(fields.alias("f")).where(F.size("f") == total)
+    values, finite = [], []
+    for i, f in enumerate(formats):
+        cell = F.get(F.col("f"), i)  # NULL past the end: never throws under ANSI
+        if f in ("int", "integer"):
+            values.append(F.struct(F.lit(T_INT), cell.cast("bigint"), F.lit(0.0), F.lit("")))
+        elif f == "double":
+            d = cell.cast("double")  # 1e400 casts to Infinity: no fact
+            finite.append(F.abs(d) < F.lit(float("inf")))
+            values.append(F.struct(F.lit(T_DOUBLE), F.lit(0), d, F.lit("")))
+        elif f == "string":
+            values.append(F.struct(F.lit(T_STRING), F.lit(0), F.lit(0.0), cell))
+    if finite:
+        rows = rows.where(reduce(operator.and_, finite))
+    row_type = "struct<" + ", ".join(f"c{j}:{VALUE_SCHEMA}" for j in range(len(values))) + ">"
+    # the cast names the fields and types them nullable, as mapInPandas does
+    return rows.select(F.struct(*values).cast(row_type).alias("r")).select("r.*")
 
 
 def _read_dsv_whole_files(

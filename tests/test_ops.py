@@ -1101,6 +1101,58 @@ def test_run_keeps_callers_job_group(spark):
     assert not escaped, f"{len(escaped)} jobs ran outside the caller's job group"
 
 
+def test_rls_runner_keeps_callers_job_group(spark, tmp_path):
+    # register_all materializes the three imports, and write_exports writes
+    # the three exports, on pool threads: each job must carry the caller's
+    # job group, or sc.cancelJobGroup cannot reach it
+    import glob
+
+    from nemo_spark.parser.runner import RlsRunner
+
+    (tmp_path / "edge.csv").write_text("".join(f"{a},{b}\n" for a, b in _CHAIN_EDGES))
+    (tmp_path / "blocked.csv").write_text("3\n")
+    (tmp_path / "tag.csv").write_text("1,x\n2,y\n")
+    program = """
+@import edge :- csv{resource="edge.csv", format=(int, int)} .
+@import blocked :- csv{resource="blocked.csv", format=(int)} .
+@import tag :- csv{resource="tag.csv", format=(int, string)} .
+reach(?x, ?y) :- edge(?x, ?y) .
+reach(?x, ?z) :- reach(?x, ?y), edge(?y, ?z) .
+open(?x, ?y) :- reach(?x, ?y), ~blocked(?y) .
+named(?n, ?y) :- tag(?x, ?n), reach(?x, ?y) .
+@export reach :- csv{} .
+@export open :- csv{} .
+@export named :- csv{} .
+"""
+    out = tmp_path / "out"
+    sc = spark.sparkContext
+    sc.setJobGroup("nemo-runner-group", "rls run under a caller's group")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        with RlsRunner(spark, source=program, workdir=str(tmp_path), local_stratum_threshold=0) as r:
+            r.run()
+            r.write_exports(str(out))
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        escaped = set(sc.statusTracker().getJobIdsForGroup(None)) - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert not escaped, f"{len(escaped)} jobs ran outside the caller's job group"
+
+    def lines(name):
+        return {
+            line.rstrip("\n")
+            for part in glob.glob(str(out / name / "part-*"))
+            for line in open(part)
+        }
+
+    assert lines("reach.csv") == {f"{a},{b}" for a, b in _CHAIN_REACH}
+    assert lines("open.csv") == {f"{a},{b}" for a, b in _CHAIN_REACH if b != 3}
+    named = {("x", b) for a, b in _CHAIN_REACH if a == 1} | {("y", b) for a, b in _CHAIN_REACH if a == 2}
+    assert lines("named.csv") == {f'"""{n}""",{b}' for n, b in named}
+
+
 def test_fan_out_widens_broadcast_join(spark):
     # a broadcast hash join keeps its stream side's width, so a one-slice
     # stream stays one task wide unless fan_out spreads it; only a SHUFFLE

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import gzip
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -235,6 +236,19 @@ def test_snapshot_runs_only_its_write(spark, tmp_path):
     assert out.orderBy("id").collect() == rich.orderBy("id").collect()
 
 
+def test_register_materializes_in_one_job_fewer(spark):
+    """register() materializes a relation with a lazy localCheckpoint and
+    its count(): 3 jobs for a deduplicated 4-slice range on local[4], where
+    an eager checkpoint followed by a count ran 4."""
+    from nemo_spark.engine.seminaive import SemiNaiveEngine
+
+    with SemiNaiveEngine(spark) as eng:
+        edb = spark.range(0, 1000, 1, 4).union(spark.range(0, 500, 1, 2))
+        jobs = _jobs_in_group(spark, "register", lambda: eng.register("r", edb))
+        assert eng.table("r").count() == 1000
+    assert jobs == 3
+
+
 def test_checkpoint_store_iri_names_and_empty_lineage(spark, tmp_path):
     """IRI predicate names sanitize into filesystem-safe snapshot paths;
     lineage() on a fresh store returns an empty frame instead of raising."""
@@ -364,3 +378,163 @@ def test_sparql_values_injection_skips_long_literals():
     # long literal's embedded '}'
     assert out.index("VALUES") > out.index('done"""')
     assert out.rstrip().endswith("}")
+
+
+# one lexeme per file: each file takes whichever decoder its own shape picks
+_INT_LEXEMES = [
+    "5", "+5", "-0", "007", " 5", "5 ", "\t5", "5\u2028", "5\u0085", "\u00a05",
+    "\u0661\u0662", "9223372036854775807", "9223372036854775808",
+    "18446744073709551616", "1.0", "1e3", "0x10", "1_000", "", "abc",
+]
+_DOUBLE_LEXEMES = [
+    "1.5", "-0.0", ".5", "5.", "1e400", "-1e400", "1e-400", "nan", "inf",
+    "Infinity", "1_000.5", " 2.5", "1.0d", "0x1p3",
+]
+# a python-path marker in a physical plan
+_PY_OPERATOR = re.compile(r"Python|InPandas|InArrow")
+
+
+def _dsv_oracle(text, formats, delimiter=",", quoting=True):
+    """Rows nemo imports from single-line records: csv.reader (or a plain
+    split) plus the parse_dsv_* value parsers; blank lines, wrong arity and
+    parse errors drop the row."""
+    import csv
+
+    from nemo_spark.model.values import (
+        ValueError_,
+        parse_dsv_double,
+        parse_dsv_int,
+        parse_dsv_string,
+    )
+
+    parsers = {"int": parse_dsv_int, "double": parse_dsv_double, "string": parse_dsv_string}
+    out = []
+    for line in text.split("\n"):
+        if line == "":
+            continue
+        rec = next(csv.reader([line], delimiter=delimiter)) if quoting else line.split(delimiter)
+        if len(rec) != len(formats):
+            continue
+        try:
+            vals = [parsers[f](cell) for f, cell in zip(formats, rec) if f != "skip"]
+        except ValueError_:
+            continue
+        out.append(tuple((v.t, v.i, repr(v.d), v.s) for v in vals))
+    return sorted(out)
+
+
+def _dsv_cells(df):
+    return sorted(tuple((c.t, c.i, repr(c.d), c.s) for c in r) for r in df.collect())
+
+
+def test_dsv_typed_decoders_match_python_parsers(spark, tmp_path):
+    """Differential: on every adversarial lexeme the Catalyst decoder (or the
+    Python fallback its probe chooses) imports exactly what csv.reader plus
+    parse_dsv_int / parse_dsv_double / parse_dsv_string import."""
+    from nemo_spark.sources.dsv_typed import read_dsv_typed
+
+    cases = [(f"{lex},tag\n7,ok\n", ["int", "string"], ",", True) for lex in _INT_LEXEMES]
+    cases += [(f"x,{lex}\ny,2.25\n", ["skip", "double"], ",", True) for lex in _DOUBLE_LEXEMES]
+    cases += [
+        ('"5",a\n6,"a,b"\n7,"x ""y"""\n', ["int", "string"], ",", True),
+        ('8,a"b\n9,c\n', ["int", "string"], ",", True),
+        ("1,a\n\n2\n3,b,c\n,\n4,d\n\n", ["int", "string"], ",", True),
+        ("1\t2.5\tx y\n2\t-3e2\tü,v\n3\t4\n", ["int", "double", "string"], "\t", True),
+        ('1,"a"\n2,b"c\n3,""\n', ["int", "string"], ",", False),
+        ("-12,1e3,ümläut\n+4,.25,\n", ["int", "double", "string"], ",", True),
+    ]
+    for k, (text, formats, delimiter, quoting) in enumerate(cases):
+        p = tmp_path / f"f{k}.csv"
+        p.write_text(text, encoding="utf-8")
+        got = _dsv_cells(read_dsv_typed(spark, str(p), formats, delimiter=delimiter, quoting=quoting))
+        assert got == _dsv_oracle(text, formats, delimiter, quoting), (text, formats)
+
+
+def test_dsv_typed_clean_file_decodes_in_catalyst(spark, tmp_path):
+    """A clean int/double/string file runs no Python operator, and its frame
+    has the Python reader's schema (a quoted file still takes that reader).
+    Either way one probe job picks the decoder."""
+    from nemo_spark.sources.dsv_typed import read_dsv_typed
+
+    fmts = ["int", "double", "string"]
+    (tmp_path / "clean.csv").write_text("1,2.5,a\n-2,1e-3,b c\n")
+    (tmp_path / "quoted.csv").write_text('1,2.5,"a"\n')
+    frames = {}
+    for name in ("clean", "quoted"):
+
+        def read(name=name):
+            frames[name] = read_dsv_typed(spark, str(tmp_path / f"{name}.csv"), fmts)
+
+        assert _jobs_in_group(spark, f"probe-{name}", read) == 1
+    clean, quoted = frames["clean"], frames["quoted"]
+    plan = clean._jdf.queryExecution().executedPlan().toString()
+    assert not _PY_OPERATOR.search(plan), plan
+    assert _PY_OPERATOR.search(quoted._jdf.queryExecution().executedPlan().toString())
+    assert clean.schema == quoted.schema
+    assert _dsv_cells(clean) == [
+        ((100, -2, "0.0", ""), (52, 0, "0.001", ""), (20, 0, "0.0", "b c")),
+        ((100, 1, "0.0", ""), (52, 0, "2.5", ""), (20, 0, "0.0", "a")),
+    ]
+
+
+_EXPORT_PROGRAM = r"""
+p(1, <http://ex.org/a>, "back\\slash") .
+p(-42, <urn:x>, "say \"hi\"") .
+p(9223372036854775807, <http://ex.org/ü>, "cr\rlf\n end") .
+p(-9223372036854775808, <http://ex.org/b>, "a,b;ümläut ✓") .
+q(2.5e0, "18446744073709551615"^^<http://www.w3.org/2001/XMLSchema#unsignedLong>, "x"@en, "7"^^<http://ex.org/dt>, true) .
+q(-1.0e-7, "18446744073709551615"^^<http://www.w3.org/2001/XMLSchema#unsignedLong>, "y\"z"@de-AT, "8"^^<http://ex.org/dt>, false) .
+"""
+
+
+def _dsv_any_rows(rows):
+    from nemo_spark.model.values import Value
+
+    return _sorted_rows(tuple(None if c is None else Value.from_cell(c).dsv_any() for c in r) for r in rows)
+
+
+def _sorted_rows(rows):
+    return sorted((tuple(r) for r in rows), key=repr)  # cells may be None
+
+
+def test_dsv_export_encoders_match_dsv_any(spark):
+    """Differential: every export surface serializes each cell as
+    Value.dsv_any. Integer, IRI, plain-string and NULL cells encode in
+    Catalyst (no Python operator in the plan); a table holding any other tag
+    takes the Arrow-batched Python serializer."""
+    from nemo_spark.model.values import (
+        T_BOOLEAN,
+        T_DOUBLE,
+        T_INT,
+        T_IRI,
+        T_LANG,
+        T_OTHER,
+        T_STRING,
+        T_ULONG,
+        VALUE_SCHEMA,
+    )
+    from nemo_spark.parser.runner import RlsRunner
+
+    r = RlsRunner(spark, source=_EXPORT_PROGRAM).run()
+    p_rows, q_rows = r.table("p").collect(), r.table("q").collect()
+    assert {c.t for row in p_rows for c in row} == {T_INT, T_IRI, T_STRING}
+    assert {c.t for row in q_rows for c in row} == {T_DOUBLE, T_ULONG, T_LANG, T_OTHER, T_BOOLEAN}
+
+    schema = ", ".join(f"c{j} {VALUE_SCHEMA}" for j in range(3))
+    with_nulls = spark.createDataFrame(
+        [
+            ((T_INT, 5, 0.0, ""), None, (T_STRING, 0, 0.0, 'x"y\\z')),
+            (None, (T_IRI, 0, 0.0, "http://ex.org/n"), None),
+        ],
+        schema,
+    )
+    for pred, df, rows in [("p", r.table("p"), p_rows), ("p", with_nulls, with_nulls.collect())]:
+        ser = r._dsv_frame(df, pred)
+        assert not _PY_OPERATOR.search(ser._jdf.queryExecution().executedPlan().toString())
+        assert _sorted_rows(ser.collect()) == _dsv_any_rows(rows)
+    assert _sorted_rows(r.serialized("p").collect()) == _dsv_any_rows(p_rows)
+
+    fallback = r._dsv_frame(r.table("q"), "q")
+    assert _PY_OPERATOR.search(fallback._jdf.queryExecution().executedPlan().toString())
+    assert _sorted_rows(fallback.collect()) == _dsv_any_rows(q_rows)
+    assert _sorted_rows(r.serialized("q").collect()) == _dsv_any_rows(q_rows)
