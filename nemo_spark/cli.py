@@ -287,7 +287,7 @@ def main(argv: list[str] | None = None) -> int:
                     print(
                         f"   Rule {label}: {s['wall_ms']:.0f}ms, "
                         f"{s['derived_rows']} facts, {s['applications']} applications "
-                        f"(stratum {s['stratum']})"
+                        f"(SCC group {s['stratum']})"
                     )
         return 1 if trace_failed else 0
     finally:

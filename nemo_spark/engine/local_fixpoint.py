@@ -68,7 +68,7 @@ class LocalFixpoint:
         chase: str,
         typed: bool,
         max_derived: int = 5_000_000,
-        stratum_idx: int = 0,
+        labels: dict[int, str] | None = None,
     ) -> None:
         self.tables = {p: set(rows) for p, rows in tables.items()}
         # append-ordered row lists backing the incremental index cache:
@@ -79,7 +79,9 @@ class LocalFixpoint:
         self._idx_cache: dict[tuple, tuple[dict, int]] = {}
         self.chase = chase
         self.typed = typed
-        self.stratum_idx = stratum_idx  # qualifies auto rule labels
+        # id(rule) -> the engine's program-stable label; rules without one
+        # are labelled by their position in run()'s rule list
+        self.labels = labels or {}
         self.max_derived = max_derived  # raise LocalOverflow beyond this
         self._derived_count = 0
         self.derived: dict[str, set] = defaultdict(set)  # fresh facts per pred
@@ -109,7 +111,7 @@ class LocalFixpoint:
                 ]
                 t_rule = _time.perf_counter()
                 fresh_rule = 0
-                lbl = rule_label(rule, self.stratum_idx, ri)
+                lbl = self.labels.get(id(rule)) or rule_label(rule, ri)
                 for variant in variants:
                     for derived_pred, rows in self._apply(rule, variant, deltas, lbl).items():
                         tbl = self.tables.setdefault(derived_pred, set())
@@ -120,9 +122,7 @@ class LocalFixpoint:
                             self.derived[derived_pred] |= fresh
                             next_deltas[derived_pred] |= fresh
                             new_any = True
-                            self.records.append(
-                                (derived_pred, rule_label(rule, self.stratum_idx, ri), round_no, frozenset(fresh))
-                            )
+                            self.records.append((derived_pred, lbl, round_no, frozenset(fresh)))
                             fresh_rule += len(fresh)
                             self._derived_count += len(fresh)
                             if self._derived_count > self.max_derived:
@@ -131,12 +131,7 @@ class LocalFixpoint:
                                 )
                 if variants:
                     self.round_stats.append(
-                        (
-                            rule_label(rule, self.stratum_idx, ri),
-                            round_no,
-                            _time.perf_counter() - t_rule,
-                            fresh_rule,
-                        )
+                        (lbl, round_no, _time.perf_counter() - t_rule, fresh_rule)
                     )
             first = False
             round_no += 1
@@ -298,7 +293,7 @@ class LocalFixpoint:
         )
         if self.chase == "restricted":
             bindings = [b for b in bindings if not self._head_satisfied(rule, b, frontier)]
-        # per-RULE skolem label (the stratum-qualified one, same policy as
+        # per-RULE skolem label (the program-stable one, same policy as
         # the distributed path): ``rule.name or head.pred`` made two unnamed
         # same-head existential rules mint COLLIDING nulls
         out = []

@@ -104,7 +104,7 @@ def _VALUE_SCHEMA_T() -> str:
 
 @dataclass
 class RoundMetrics:
-    stratum: int
+    stratum: int  # the SCC group's index in stratify() order
     round: int
     rule: str
     derived_rows: int
@@ -174,7 +174,7 @@ class SemiNaiveEngine:
         import uuid as _uuid
 
         self._uid = _uuid.uuid4().hex[:12]
-        # local_stratum_threshold > 0: strata whose every input table is below
+        # local_stratum_threshold > 0: SCC groups whose every input table is below
         # the threshold evaluate in ONE in-memory pass (engine/local_fixpoint)
         # instead of one Spark barrier per semi-naive round — the fix for
         # deep sequential recursion (LCS-class programs advance one chain
@@ -222,9 +222,9 @@ class SemiNaiveEngine:
         # ExecutionTraceTree lookups (nemo/src/execution/tracing/trace.rs)
         self._provenance: list[tuple[str, str, int, int, DataFrame]] = []
         self._rules_by_label: dict[str, Rule] = {}
-        # id(rule) -> stratum-qualified label: skolem minting must be
-        # per-RULE unique (two unnamed existential rules with the same head
-        # predicate would otherwise mint colliding labeled nulls)
+        # id(rule) -> program-stable label (rule_label): skolem minting must
+        # be per-RULE unique (two unnamed existential rules with the same
+        # head predicate would otherwise mint colliding labeled nulls)
         self._label_of: dict[int, str] = {}
         self._tables: dict[str, DataFrame] = {}
         # base (EDB) facts per predicate: registered tables + inline program
@@ -375,7 +375,8 @@ class SemiNaiveEngine:
     # -------------------------------------------------------------- tracing
 
     def trace_fact(self, pred: str, values: tuple) -> list[dict]:
-        """Which rule derived this fact, at which stratum/round?
+        """Which rule derived this fact, in which SCC group ("stratum") and
+        round?
 
         Returns every provenance record containing the fact (EDB facts and
         runs without ``trace=True`` yield []). Answered with ONE filtered
@@ -508,13 +509,14 @@ class SemiNaiveEngine:
     def run(self, program: Program, outputs: set[str] | None = None) -> EngineStats:
         """Evaluate to fixpoint. ``outputs`` (or ``program.outputs`` when not
         given) triggers dead-rule pruning: rules from which no output
-        predicate is backward-reachable are never evaluated — their strata
-        produce zero rounds (active.rs parity). No outputs = everything is
+        predicate is backward-reachable are never evaluated — they join no
+        SCC group (active.rs parity). No outputs = everything is
         an output (set_default_outputs.rs); arity checks still cover the
         FULL program so a pruned-away inconsistency is not silently
         accepted."""
         arities = program.predicates()
         targets = set(outputs) if outputs is not None else set(program.outputs)
+        self._label_rules(program)
         program = program.pruned(targets)
         for p, n in arities.items():
             if p in self._arity and self._arity[p] != n:
@@ -553,18 +555,19 @@ class SemiNaiveEngine:
                 else df
             )
 
-        strata = stratify(program)
-        for si, s in enumerate(strata):
-            for ri, r in enumerate(s):
-                # OVERWRITE, not setdefault: auto labels ('rule_0') collide
-                # across run()/extend() calls on one engine, and trace_tree
-                # must resolve a label to the rule of the call that RECORDED
-                # the provenance — latest wins
-                self._rules_by_label[_rule_label(r, si, ri)] = r
-                self._label_of[id(r)] = _rule_label(r, si, ri)
-        for stratum_idx, rules in enumerate(strata):
+        for stratum_idx, rules in enumerate(stratify(program)):
             self._run_stratum(stratum_idx, rules)
         return self.stats
+
+    def _label_rules(self, program: Program) -> None:
+        """Label every rule of ``program`` by its written position
+        (:func:`rule_label`). OVERWRITE, not setdefault: auto labels
+        ('rule_0') collide across run()/extend() calls on one engine, and
+        trace_tree must resolve a label to the rule of the call that
+        RECORDED the provenance — latest wins."""
+        for i, r in enumerate(program.rules):
+            self._rules_by_label[_rule_label(r, i)] = r
+            self._label_of[id(r)] = _rule_label(r, i)
 
     def extend(self, program: Program, new_facts: dict[str, DataFrame]) -> EngineStats:
         """Incremental maintenance: add facts and continue the fixpoint from
@@ -619,16 +622,9 @@ class SemiNaiveEngine:
                 counts[pred] = cnt
         if not deltas:
             return self.stats
-        strata = stratify(program)
-        for si, s in enumerate(strata):
-            for ri, r in enumerate(s):
-                # OVERWRITE, not setdefault: auto labels ('rule_0') collide
-                # across run()/extend() calls on one engine, and trace_tree
-                # must resolve a label to the rule of the call that RECORDED
-                # the provenance — latest wins
-                self._rules_by_label[_rule_label(r, si, ri)] = r
-                self._label_of[id(r)] = _rule_label(r, si, ri)
-        monotone = all(not r.negated and r.head_aggregate() is None for s in strata for r in s)
+        self._label_rules(program)
+        groups = stratify(program)
+        monotone = all(not r.negated and r.head_aggregate() is None for r in program.rules)
         if not monotone:
             # non-monotone: stale IDB facts derived under negation/aggregates
             # cannot be retracted from append-only tables — reset EVERY IDB
@@ -637,8 +633,7 @@ class SemiNaiveEngine:
             # its BASE facts (registered + inline + injected; popping the
             # whole table would delete registered EDB rows of predicates
             # that are also rule heads) and recompute.
-            idb = {h.pred for s in strata for r in s for h in r.heads()}
-            reset = set(idb)
+            reset = program.idb_predicates()
             for p in reset:
                 if p in self._base_tables:
                     base = self._base_tables[p]
@@ -654,33 +649,29 @@ class SemiNaiveEngine:
                 if tbl is not None:
                     self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             self._provenance = [rec for rec in self._provenance if rec[0] not in reset]
-            for stratum_idx, rules in enumerate(strata):
+            for stratum_idx, rules in enumerate(groups):
                 self._run_stratum(stratum_idx, rules)
             return self.stats
-        for stratum_idx, rules in enumerate(strata):
-            self._run_stratum(stratum_idx, rules, seed_delta=(deltas, counts))
+        # incremental continuation, no round 0: each group starts from the
+        # injected facts AND the fresh facts of every group before it
+        for stratum_idx, rules in enumerate(groups):
+            idb = {h.pred for r in rules for h in r.heads()}
+            derived: dict[str, list[tuple[DataFrame, int]]] = {}
+            self._rounds_from(stratum_idx, rules, idb, 0, deltas, counts, True, derived)
+            for p, parts in derived.items():
+                for fresh, cnt in parts:
+                    deltas[p] = deltas[p].unionByName(fresh) if p in deltas else fresh
+                    counts[p] = counts.get(p, 0) + cnt
         return self.stats
 
-    # ---------------------------------------------------------------- stratum
+    # ------------------------------------------------------------------ group
 
-    def _run_stratum(
-        self,
-        stratum_idx: int,
-        rules: list[Rule],
-        seed_delta: tuple[dict[str, DataFrame], dict[str, int]] | None = None,
-    ) -> None:
+    def _run_stratum(self, stratum_idx: int, rules: list[Rule]) -> None:
+        """Evaluate one SCC group (``stratum_idx`` is its index in
+        :func:`stratify`'s order) to fixpoint over the current tables."""
         idb = {h.pred for r in rules for h in r.heads()}
 
-        if seed_delta is None and self._try_local_stratum(stratum_idx, rules):
-            return
-
-        if seed_delta is not None:
-            # incremental continuation: skip round 0, start from given deltas
-            delta = {p: d for p, d in seed_delta[0].items()}
-            delta_counts = dict(seed_delta[1])
-            new_any = any(delta_counts.values())
-            round_idx = 0
-            self._rounds_from(stratum_idx, rules, idb, round_idx, delta, delta_counts, new_any)
+        if self._try_local_stratum(stratum_idx, rules):
             return
 
         # Round 0: full evaluation of every rule against current tables.
@@ -692,20 +683,19 @@ class SemiNaiveEngine:
         delta_counts: dict[str, int] = {}
         new_any = False
         try:
-            for ri, rule in enumerate(rules):
+            for rule in rules:
                 t0 = time.time()
                 derived_map = self._eval_rule(rule, {}, {}, use_delta_atom=None)
                 if derived_map is None:
                     continue
+                label = self._label_of[id(rule)]
                 for hp, derived in derived_map.items():
                     fresh, cnt = self._merge(hp, derived)
-                    self._record(stratum_idx, round_idx, _rule_label(rule, stratum_idx, ri), cnt, time.time() - t0)
+                    self._record(stratum_idx, round_idx, label, cnt, time.time() - t0)
                     t0 = time.time()
                     if cnt:
                         if self.trace:
-                            self._provenance.append(
-                                (hp, _rule_label(rule, stratum_idx, ri), stratum_idx, round_idx, fresh)
-                            )
+                            self._provenance.append((hp, label, stratum_idx, round_idx, fresh))
                         new_any = True
                         # freshes of the same pred are disjoint (each anti-join ran
                         # against the table already containing earlier freshes),
@@ -721,7 +711,9 @@ class SemiNaiveEngine:
             release_staging(mark)
 
         # Rounds 1..: semi-naive — only delta-reading variants of rules whose
-        # body touches a predicate that changed last round. All variants with
+        # body touches a predicate that changed last round (none in a
+        # non-recursive group, whose bodies never read its own heads: it
+        # ends after round 0). All variants with
         # the same head predicate are unioned and merged ONCE per round: one
         # dedup-anti-join + one materializing job per predicate, not per rule
         # (rounds are the latency unit of a fixpoint; fewer jobs per round
@@ -738,7 +730,11 @@ class SemiNaiveEngine:
         delta: dict[str, DataFrame],
         delta_counts: dict[str, int],
         new_any: bool,
+        derived_out: dict[str, list[tuple[DataFrame, int]]] | None = None,
     ) -> None:
+        """Semi-naive rounds after ``round_idx`` from the given deltas, to
+        the group's fixpoint. ``derived_out`` collects every round's fresh
+        facts and counts per predicate."""
         from nemo_spark.sources.sparql import release_staging, staging_mark
 
         while new_any and round_idx < self.max_rounds:
@@ -749,7 +745,7 @@ class SemiNaiveEngine:
                 per_pred: dict[str, DataFrame] = {}
                 per_pred_rules: dict[str, list[str]] = {}
                 t_eval: dict[str, float] = {}
-                for ri, rule in enumerate(rules):
+                for rule in rules:
                     hot = [
                         i
                         for i, a in enumerate(rule.body)
@@ -775,7 +771,7 @@ class SemiNaiveEngine:
                     wall = (time.time() - t0) / len(merged_map)
                     for hp, derived in merged_map.items():
                         per_pred[hp] = per_pred[hp].unionByName(derived) if hp in per_pred else derived
-                        per_pred_rules.setdefault(hp, []).append(_rule_label(rule, stratum_idx, ri))
+                        per_pred_rules.setdefault(hp, []).append(self._label_of[id(rule)])
                         t_eval[hp] = t_eval.get(hp, 0.0) + wall
                 next_delta: dict[str, DataFrame] = {}
                 next_counts: dict[str, int] = {}
@@ -804,6 +800,8 @@ class SemiNaiveEngine:
                         new_any = True
                         next_delta[hp] = fresh
                         next_counts[hp] = cnt
+                        if derived_out is not None:
+                            derived_out.setdefault(hp, []).append((fresh, cnt))
                 delta, delta_counts = next_delta, next_counts
             finally:
                 # this round's merges materialized every frame that read staged
@@ -825,7 +823,7 @@ class SemiNaiveEngine:
             # fixpoint; a silent partial result is wrong answers)
             raise RuntimeError(
                 f"fixpoint did not converge within max_rounds={self.max_rounds} "
-                f"(stratum {stratum_idx}); raise SemiNaiveEngine(max_rounds=...)"
+                f"(group {stratum_idx}); raise SemiNaiveEngine(max_rounds=...)"
             )
 
     def _try_local_stratum(self, stratum_idx: int, rules: list[Rule]) -> bool:
@@ -892,12 +890,7 @@ class SemiNaiveEngine:
         if len(set(typed_flags)) > 1:
             return False
         typed = bool(typed_flags and typed_flags[0])
-        lf = LocalFixpoint(
-            tables,
-            self.chase,
-            typed,
-            stratum_idx=stratum_idx,
-        )
+        lf = LocalFixpoint(tables, self.chase, typed, labels=self._label_of)
         from nemo_spark.engine.local_fixpoint import LocalOverflow
 
         try:
@@ -925,15 +918,13 @@ class SemiNaiveEngine:
             fresh, cnt = self._merge(pred, df)
         # per-rule attribution (report()/timing() parity with the distributed
         # path): the local pass evaluates rule-by-rule in Python, so its
-        # measured per-rule walls are real; residual Spark collect/merge time
-        # goes under the 'local_fixpoint' label with cnt 0
-        rule_wall = 0.0
+        # measured per-rule walls are real. The residual Spark collect/merge
+        # time is split evenly over the group's rules (every rule has a
+        # round-0 record), as the distributed path splits one shared body
+        # evaluation across its head predicates
+        residual = max(time.time() - t0 - sum(st[2] for st in lf.round_stats), 0.0) / len(rules)
         for label, round_no, wall, fresh_cnt in lf.round_stats:
-            self._record(stratum_idx, round_no, label, fresh_cnt, wall)
-            rule_wall += wall
-        self._record(
-            stratum_idx, 0, "local_fixpoint", 0, max(time.time() - t0 - rule_wall, 0.0)
-        )
+            self._record(stratum_idx, round_no, label, fresh_cnt, wall + (residual if round_no == 0 else 0.0))
         if self.trace:
             # per-rule derivation records, same shape as the distributed
             # path's — trace_tree attributes rules identically whichever

@@ -1,15 +1,19 @@
-"""Stratification of rule programs.
+"""Evaluation order of rule programs: one group per SCC, in topological order.
 
-Mirrors nemo's selection-strategy stack (reference:
-``nemo/src/execution/selection_strategy/strategy_stratified_negation.rs:27-52``):
-rules with negation or aggregation over a predicate must run in a strictly
-later stratum than the rules deriving that predicate. Within a stratum, the
-engine round-robins rules to fixpoint
-(``strategy_round_robin.rs:14-62``).
+Mirrors nemo's default selection strategy, "stratified negation ▸
+dependency graph ▸ round robin" (reference:
+``nemo/src/execution/selection_strategy/strategy_graph.rs:14``,
+``strategy_stratified_negation.rs:27-52``). The rule dependency graph
+(Tarjan SCC over predicates) is condensed, and each SCC's rules form one
+group. The engine evaluates the groups one after another in topological
+order, each to its own fixpoint, round-robining that group's rules
+(``strategy_round_robin.rs:14-62``). A non-recursive group therefore costs a
+single application per rule.
 
-Implementation: condensation of the rule dependency graph (Tarjan SCC over
-predicates), topological order, with the constraint that a negative/aggregate
-edge inside an SCC is an error (non-stratifiable program).
+Rules with negation or aggregation over a predicate must see that
+predicate complete. Topological order gives this for free, since every SCC
+comes after the SCCs it reads; the one error left is a negative/aggregate
+edge inside an SCC (a non-stratifiable program).
 """
 
 from __future__ import annotations
@@ -20,8 +24,10 @@ from nemo_spark.model.rules import Program, Rule
 
 
 def stratify(program: Program) -> list[list[Rule]]:
-    """Partition rules into an ordered list of strata."""
-    # Edges between predicates: pos (same-or-later stratum), neg (strictly later).
+    """The rules of each SCC, one group per SCC, groups in topological order
+    and rules in program order within a group."""
+    # Edges between predicates, body -> head: neg edges (negation, aggregation)
+    # must not close a cycle.
     pos_edges: dict[str, set[str]] = defaultdict(set)  # body -> head
     neg_edges: dict[str, set[str]] = defaultdict(set)
     idb = program.idb_predicates()
@@ -59,42 +65,12 @@ def stratify(program: Program) -> list[list[Rule]]:
                     f"program not stratifiable: negation/aggregation cycle through {src} -> {dst}"
                 )
 
-    # Longest-path stratum numbers over the condensation (neg edges bump +1).
-    ncomp = max(comp) + 1 if n else 0
-    comp_adj: list[set[tuple[int, int]]] = [set() for _ in range(ncomp)]
-    for src, dsts in pos_edges.items():
-        for dst in dsts:
-            a, b = comp[index[src]], comp[index[dst]]
-            if a != b:
-                comp_adj[a].add((b, 0))
-    for src, dsts in neg_edges.items():
-        for dst in dsts:
-            comp_adj[comp[index[src]]].add((comp[index[dst]], 1))
-
-    stratum_of_comp = [0] * ncomp
-    # relax in reverse topological order of Tarjan output (Tarjan emits reverse topo)
-    order = sorted(range(ncomp), reverse=True)  # comp ids: later id = earlier in topo
-    changed = True
-    iters = 0
-    while changed:  # small graphs; Bellman-Ford style is fine
-        changed = False
-        iters += 1
-        if iters > ncomp + 2:
-            raise ValueError("stratification did not converge (cycle?)")
-        for c in order:
-            for dst, w in comp_adj[c]:
-                if stratum_of_comp[dst] < stratum_of_comp[c] + w:
-                    stratum_of_comp[dst] = stratum_of_comp[c] + w
-                    changed = True
-
-    def stratum_of_pred(p: str) -> int:
-        return stratum_of_comp[comp[index[p]]] if p in index else 0
-
-    nstrata = (max(stratum_of_comp) + 1) if ncomp else 1
-    strata: list[list[Rule]] = [[] for _ in range(nstrata)]
+    # Tarjan numbers components in reverse topological order: the highest
+    # id is a source, so evaluation runs from the highest id down
+    groups: dict[int, list[Rule]] = defaultdict(list)
     for r in program.rules:
-        strata[stratum_of_pred(r.head.pred)].append(r)
-    return [s for s in strata if s]
+        groups[comp[index[r.head.pred]]].append(r)
+    return [groups[c] for c in sorted(groups, reverse=True)]
 
 
 def _tarjan_scc(n: int, adj: list[list[int]]) -> list[int]:

@@ -182,12 +182,12 @@ class Rule:
         return {a.pred for a in self.negated}
 
 
-def rule_label(rule: "Rule", stratum_idx: int, ri: int) -> str:
-    """Stable display label: the rule's name, or a STRATUM-qualified auto
-    name — per-stratum 'rule_0' labels collided across strata in the
-    engine's _rules_by_label and trace_tree silently lost derivation
-    subtrees for later strata."""
-    return rule.name or (f"rule_{ri}" if stratum_idx == 0 else f"rule_{stratum_idx}_{ri}")
+def rule_label(rule: "Rule", index: int) -> str:
+    """Stable display label: the rule's name, or ``rule_{index}`` where
+    ``index`` is the rule's position in the program as written (before
+    dead-rule pruning). One label then names one rule whichever group it
+    is evaluated in and whichever rules pruning drops."""
+    return rule.name or f"rule_{index}"
 
 
 @dataclass

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -276,31 +277,43 @@ class RlsRunner:
             raise CompileError(f"unsupported compression {name!r} (compression_format.rs)")
         return name
 
-    def _load_import(self, imp, arity_hint: int | None) -> tuple[DataFrame, int]:
-        df, n = self._load_import_inner(imp, arity_hint)
+    def _import_reader(self, imp, arity_hint: int | None) -> tuple[Callable[[], DataFrame], int]:
+        """Resolve one import on the calling thread and return its reader
+        call, still to be made, with the import's arity.
+
+        Resolution covers the resource (the stdin, HTTP and gzip staging
+        caches are check-then-set, so not thread-safe), the formats (with
+        the arity hint or a ``peek_field_count`` probe) and every option. A
+        DSV reader call is left to the caller, who may run several at once;
+        the other formats read here, since their arity comes from the
+        frame."""
+        res = self._resource(imp)
         lim = self._option_value(imp, "limit")
-        if lim is not None:
+
+        def limited(df: DataFrame) -> DataFrame:
             # StandardParameter::Limit (reference DsvReader/RdfReader limit:
             # stop after N records; Spark's limit picks N rows without a
             # file-order guarantee — same cardinality contract)
-            df = df.limit(lim.int_value())
-        return df, n
+            return df if lim is None else df.limit(lim.int_value())
 
-    def _load_import_inner(self, imp, arity_hint: int | None) -> tuple[DataFrame, int]:
-        res = self._resource(imp)
         if imp.fmt in ("csv", "tsv", "dsv"):
             fmts = self._formats(imp, arity_hint)
             quoting = self._option_value(imp, "quoting")
             ignore_headers = self._option_value(imp, "ignore_headers")
-            df = read_dsv_typed(
-                self.spark,
-                res,
-                fmts,
+            options = dict(
                 delimiter=self._delimiter(imp),
                 quoting=(quoting is None or quoting.lexical() == "true"),
                 ignore_headers=(ignore_headers is not None and ignore_headers.lexical() == "true"),
             )
-            return df, len([f for f in fmts if f != "skip"])
+            return (
+                lambda: limited(read_dsv_typed(self.spark, res, fmts, **options)),
+                len([f for f in fmts if f != "skip"]),
+            )
+        df, n = self._read_non_dsv(imp, res)
+        df = limited(df)
+        return lambda: df, n
+
+    def _read_non_dsv(self, imp, res: str) -> tuple[DataFrame, int]:
         if imp.fmt in ("rdf", "ntriples", "turtle", "nquads", "trig", "rdfxml"):
             from nemo_spark.sources.rdf_typed import read_rdf_typed
 
@@ -374,6 +387,7 @@ class RlsRunner:
             }
             required = self.compiled.program.required(targets)[0] if targets else None
             import_count: dict[str, int] = {}
+            readers: list[tuple[str, Callable[[], DataFrame]]] = []
             for imp in self.compiled.imports:
                 import_count[imp.pred] = import_count.get(imp.pred, 0) + 1
             for imp in self.compiled.imports:
@@ -410,9 +424,15 @@ class RlsRunner:
                         arities.setdefault(imp.pred, len(vars_))
                         deferred.add(imp.pred)
                         continue
-                df, n = self._load_import(imp, arities.get(imp.pred))
+                read, n = self._import_reader(imp, arities.get(imp.pred))
                 arities.setdefault(imp.pred, n)
-                frames[imp.pred] = frames[imp.pred].unionByName(df) if imp.pred in frames else df
+                readers.append((imp.pred, read))
+            # every import is resolved; only the reader calls (one probe job
+            # per DSV file) are submitted together, and their frames are
+            # unioned in program order
+            loaded = run_concurrently(self.spark, lambda r: r[1](), readers)
+            for (pred, _), df in zip(readers, loaded):
+                frames[pred] = frames[pred].unionByName(df) if pred in frames else df
             for pred, rows in self.compiled.fact_rows.items():
                 df = typed_rows_df(self.spark, rows, arities[pred])
                 frames[pred] = frames[pred].unionByName(df) if pred in frames else df
@@ -475,7 +495,10 @@ class RlsRunner:
              "rules": {label: {"stratum": int, "wall_ms": float,
                                "derived_rows": int, "applications": int}}}
 
-        ``applications`` counts semi-naive rounds the rule ran in;
+        ``stratum`` is the index of the rule's SCC group: the engine
+        evaluates one group per SCC of the dependency graph, in topological
+        order (``engine/stratify.py``). ``applications`` counts semi-naive
+        rounds the rule ran in, so a rule of a non-recursive group has one;
         ``derived_rows`` counts NEW facts only (dedup-vs-history survivors),
         matching the reference's "derived facts" number."""
         stats = self.engine.stats
