@@ -2,7 +2,8 @@
 triples -> fixpoint closure.
 
 Stages (each checkpointable to a :class:`CheckpointStore` snapshot with
-per-partition lineage + metrics, so runs resume mid-pipeline):
+per-partition lineage + metrics, so runs resume mid-pipeline; stages 1 and
+2+3 share no input and run concurrently):
 
 1. extract   — vectorized Arrow-batched triple extraction per turn
 2. link      — broadcast alias-dictionary join (exact) per mention
@@ -11,7 +12,8 @@ per-partition lineage + metrics, so runs resume mid-pipeline):
                union-find for dimension-sized graphs, star CC otherwise)
 4. triples   — canonicalized, set-semantics (subj, pred, obj)
 5. closure   — semi-naive fixpoint: transitive predicates materialized by
-               ``ops/graph.transitive_closure`` (path doubling, or a
+               ``ops/graph.transitive_closure`` (path doubling over
+               (a, b, shortest length), one Spark action per round, or a
                driver-local closure for small graphs)
 
 The closure stage follows nemo's evaluation core: derived triples are
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +34,7 @@ from nemo_spark.engine.checkpoint import CheckpointStore
 from nemo_spark.kg import transcripts as T
 from nemo_spark.kg.canonicalize import canonical_map_from_alias_dict
 from nemo_spark.kg.extract import extract_turn_features_arrow
+from nemo_spark.session import run_concurrently
 
 
 @dataclass
@@ -79,14 +83,19 @@ def run_pipeline(
     # 1. extract — the one-pass per-turn feature kernel (triple + mention
     # count + quality + langid + dedup fingerprint) in Arrow/RE2. Looked up
     # through this module's global at call time, so a wrapper patched onto
-    # ``pipeline.extract_turn_features_arrow`` sees the call
-    triples_raw = stage("triples_raw", lambda: extract_turn_features_arrow(transcripts), 1)
-
+    # ``pipeline.extract_turn_features_arrow`` sees the call.
     # 2+3. canonical map: CC over the (alias, entity) bipartite graph.
     # The alias dictionary is dimension-sized, so the canonical map is small
     # and broadcastable; mentions never shuffle for linking.
-    canonical_map = stage(
-        "canonical_map", lambda: canonical_map_from_alias_dict(alias_dict), 1, materialize=True
+    # The two stages share no input, so they are submitted together: the
+    # driver's union-find overlaps the executors' extraction snapshot.
+    triples_raw, canonical_map = run_concurrently(
+        spark,
+        lambda run: run(),
+        [
+            partial(stage, "triples_raw", lambda: extract_turn_features_arrow(transcripts), 1),
+            partial(stage, "canonical_map", lambda: canonical_map_from_alias_dict(alias_dict), 1, materialize=True),
+        ],
     )
 
     # 4. canonical triples (set semantics); materialized once — extraction

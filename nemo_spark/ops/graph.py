@@ -2,14 +2,21 @@
 
 The generic rule engine evaluates linear recursion in O(diameter) rounds
 (nemo's round-robin fixpoint). For the KG pipeline's closure stage we use the
-non-linear doubling form instead::
+non-linear doubling form instead, which converges in O(log diameter) rounds —
+at cluster scale, rounds and jobs are synchronization barriers, so fewer of
+them beats cheaper ones.
 
-    tc_{t+1} = tc_t UNION (tc_t JOIN tc_t)
-
-which converges in O(log diameter) rounds — at cluster scale, rounds are
-synchronization barriers, so halving round count beats shaving per-round cost.
-Semi-naive refinement: a new pair must involve last round's delta on at least
-one side (delta JOIN tc  UNION  tc JOIN delta).
+The closure is kept as ``(a, b, len)``, ``len`` being the exact length of a
+shortest walk from ``a`` to ``b``. After round ``k`` the relation holds
+exactly the pairs within ``2^k`` steps. A prefix of a shortest walk is itself
+a shortest walk, so a pair first reached in round ``k`` is the composition of
+a pair at length exactly ``2^(k-1)`` (the frontier) with a pair already
+known; round ``k`` joins only the frontier and keeps ``min(len)`` per pair.
+No pair at length ``2^k`` means no longer walk exists either, so the loop
+stops without a confirming round. Each round is one eagerly checkpointed
+aggregate whose :class:`~pyspark.sql.Observation` also yields the next
+frontier's size and byte width for the broadcast gate: no count or sample
+jobs.
 
 Dedup-vs-history / checkpoint cadence follow the engine's pattern
 (``nemo/src/execution/planning/operations/duplicates.rs``, defrag
@@ -21,7 +28,7 @@ from __future__ import annotations
 import logging
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -51,9 +58,17 @@ def transitive_closure(
     :data:`_LOCAL_TC_MAX_PAIRS`; CC output is linear in nodes, so its
     threshold can be 10x higher.
 
+    The distributed path runs one Spark action per doubling round (see the
+    module docstring): when the longest shortest walk has length ``L`` it
+    runs ``ceil(log2 L)`` rounds, plus one when ``L`` is a power of two. The frontier joins as a
+    broadcast while it has at most ``broadcast_threshold`` rows and its
+    observed key bytes stay within ``broadcast_max_bytes``. Raises
+    ``ValueError`` when ``max_rounds`` rounds leave a non-empty frontier.
+
     NULL endpoints follow SQL join semantics: they are carried outward
     through compositions ((NULL, y)∘(y, z) = (NULL, z)) but a path never
-    continues through a NULL. Edges with NULL or NaN endpoints therefore
+    continues through a NULL. Grouping by pair treats NULL = NULL and NaN =
+    NaN, so each such pair appears once. Edges with NULL or NaN endpoints
     always take the distributed path, whose joins implement exactly that."""
     if small_graph_threshold and edges.schema[src].dataType == edges.schema[dst].dataType:
         # the local path types its output columns from src's type (closure
@@ -65,58 +80,53 @@ def transitive_closure(
             local = _local_tc(edges.sparkSession, rows, edges.schema[src].dataType, src, dst)
             if local is not None:
                 return local
-    tc = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
+    seed = edges.groupBy(F.col(src).alias("a"), F.col(dst).alias("b")).agg(
+        F.lit(1).cast("long").alias("len")
     )
-    delta = tc
-    delta_cnt = tc.count()
+    tc, frontier, frontier_bytes, _ = _checkpoint_round(seed, 1)
     rounds = 0
-    est_row: float | None = None
-    while delta_cnt and rounds < max_rounds:
+    while frontier:
+        if rounds == max_rounds:
+            raise ValueError(
+                f"transitive_closure did not converge in {max_rounds} rounds: "
+                f"{frontier} pairs are {1 << rounds} steps apart and may extend; "
+                f"raise max_rounds (doubling needs log2(longest path) rounds)"
+            )
         rounds += 1
         t0 = time.time()
-        d = delta
-        if delta_cnt <= broadcast_threshold:
-            # the row gate alone would let wide string keys (KG IRIs run
-            # 100+ bytes) force multi-hundred-MB broadcasts — an explicit
-            # F.broadcast bypasses autoBroadcastJoinThreshold entirely, so
-            # estimate bytes from one sample of the (checkpointed) input
-            # (key width is stable across rounds; don't re-sample each one)
-            if est_row is None:
-                sample = tc.limit(256).collect()
-                est_row = (
-                    sum(
-                        sum(len(str(v)) if v is not None else 4 for v in r) + 16
-                        for r in sample
-                    )
-                    / len(sample)
-                    if sample
-                    else 0.0
-                )
-            if delta_cnt * est_row <= broadcast_max_bytes:
-                d = F.broadcast(delta)
-        left = d.alias("l").join(tc.alias("r"), F.col("l.b") == F.col("r.a")).select(
-            F.col("l.a").alias("a"), F.col("r.b").alias("b")
+        reach = 1 << (rounds - 1)
+        d = tc.filter(F.col("len") == reach)
+        if frontier <= broadcast_threshold and frontier_bytes <= broadcast_max_bytes:
+            # an explicit hint bypasses autoBroadcastJoinThreshold entirely,
+            # so the byte bound keeps wide string keys (KG IRIs run 100+
+            # bytes) from forcing multi-hundred-MB broadcasts
+            d = F.broadcast(d)
+        cand = d.alias("l").join(tc.alias("r"), F.col("l.b") == F.col("r.a")).select(
+            F.col("l.a").alias("a"), F.col("r.b").alias("b"), (F.col("l.len") + F.col("r.len")).alias("len")
         )
-        right = tc.alias("l").join(d.alias("r"), F.col("l.b") == F.col("r.a")).select(
-            F.col("l.a").alias("a"), F.col("r.b").alias("b")
-        )
-        cand = left.unionByName(right).dropDuplicates().alias("__d")
-        fresh = cand.join(
-            tc.alias("__e"),
-            # null-safe: plain key equality never matches NULL endpoints, so a
-            # null-carrying pair would be "fresh" every round (fixpoint spin)
-            F.col("__d.a").eqNullSafe(F.col("__e.a")) & F.col("__d.b").eqNullSafe(F.col("__e.b")),
-            how="left_anti",
-        ).localCheckpoint(eager=True)
-        delta_cnt = fresh.count()
-        if delta_cnt:
-            tc = tc.unionByName(fresh).localCheckpoint(eager=True)
-        delta = fresh
-        log.debug("tc doubling round %d fresh=%d %.2fs", rounds, delta_cnt, time.time() - t0)
+        merged = tc.unionByName(cand).groupBy("a", "b").agg(F.min("len").alias("len"))
+        tc, frontier, frontier_bytes, fresh = _checkpoint_round(merged, 2 * reach)
+        log.debug("tc doubling round %d fresh=%d %.2fs", rounds, fresh, time.time() - t0)
     return tc.select(F.col("a").alias(src), F.col("b").alias(dst))
+
+
+def _checkpoint_round(rel: DataFrame, reach: int) -> tuple[DataFrame, int, int, int]:
+    """``rel`` eagerly checkpointed (the round's one action), with what an
+    observation of that same job saw: the frontier (pairs at length exactly
+    ``reach``), its byte width, and the fresh pairs (longer than ``reach //
+    2``). A key's width is its string form's length (4 for NULL) and a row
+    adds 16 bytes of overhead."""
+    obs = Observation()
+    at_frontier = F.col("len") == reach
+    width = sum(F.coalesce(F.length(F.col(c).cast("string")), F.lit(4)) for c in ("a", "b")) + 16
+    out = rel.observe(
+        obs,
+        F.count_if(at_frontier).alias("frontier"),
+        F.sum(F.when(at_frontier, width)).alias("bytes"),
+        F.count_if(F.col("len") > reach // 2).alias("fresh"),
+    ).localCheckpoint(eager=True)
+    seen = obs.get
+    return out, seen["frontier"], seen["bytes"] or 0, seen["fresh"]
 
 
 # driver-memory guard for the local path: closure OUTPUT is worst-case
@@ -144,9 +154,9 @@ def _local_tc(spark, rows, dt, src: str, dst: str) -> DataFrame | None:
             if x in seen:
                 continue
             seen.add(x)
+            if len(data) + len(seen) > _LOCAL_TC_MAX_PAIRS:
+                return None
             stack.extend(adj.get(x, ()))
         data.extend((s, x) for x in seen)
-        if len(data) > _LOCAL_TC_MAX_PAIRS:
-            return None
     schema = StructType([StructField(src, dt), StructField(dst, dt)])
     return single_slice_frame(spark, data, schema)

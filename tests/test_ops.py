@@ -1164,3 +1164,120 @@ def test_fan_out_widens_broadcast_join(spark):
     assert fan_out(joined).rdd.getNumPartitions() == p
     grouped = spark.range(0, 1000, 1, 2).groupBy((F.col("id") % 7).alias("k")).count()
     assert fan_out(grouped) is grouped
+
+
+def _bfs_closure(pairs):
+    """Reference closure: a BFS per source in which NULL never continues a
+    path (SQL join semantics) and NaN is one node (Spark joins NaN to NaN)."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+    out = set()
+    for s, first in adj.items():
+        seen, stack = set(), list(first)
+        while stack:
+            x = stack.pop()
+            if x not in seen:
+                seen.add(x)
+                if x is not None:
+                    stack.extend(adj.get(x, ()))
+        out |= {(s, x) for x in seen}
+    return out
+
+
+def _hashable(v):
+    # NaN is unequal to itself in Python and binary cells collect as
+    # bytearray: compare closures on stand-ins
+    return "NaN" if isinstance(v, float) and v != v else bytes(v) if isinstance(v, bytearray) else v
+
+
+def _tc_pairs(frame, **kw):
+    return {(_hashable(r.src), _hashable(r.dst)) for r in transitive_closure(frame, **kw).collect()}
+
+
+def test_tc_distributed_matches_bfs_and_local_path(spark):
+    """The doubling loop's stopping rule (no pair at length 2^k) against a
+    BFS oracle and the driver-local path, on chains either side of a power
+    of two, cycles, self-loops, duplicates, NULL/NaN/binary keys, empty input
+    and random graphs."""
+    import random
+
+    def chain(n):
+        return [(i, i + 1) for i in range(n)]
+
+    cases = {
+        "chain7": (chain(7), "long"),
+        "chain8": (chain(8), "long"),
+        "chain9": (chain(9), "long"),
+        "cycle": ([(0, 1), (1, 2), (2, 3), (3, 4), (4, 0), (4, 5)], "long"),
+        "self_loop": ([(1, 1), (1, 2), (2, 3)], "long"),
+        "duplicates": ([(1, 2), (1, 2), (2, 3), (2, 3), (3, 1)], "long"),
+        "null": ([("a", None), (None, "b"), ("b", "c"), ("c", None), (None, "d"), ("d", "c")], "string"),
+        "nan": ([(float("nan"), 1.0), (1.0, float("nan")), (2.0, float("nan")), (1.0, 3.0)], "double"),
+        "binary": ([(b"x", b"y"), (b"y", b"z"), (b"z", b"x")], "binary"),
+        "empty": ([], "long"),
+    }
+    for seed in (1, 2):
+        rnd = random.Random(seed)
+        cases[f"random{seed}"] = ([(rnd.randrange(40), rnd.randrange(40)) for _ in range(60)], "long")
+    for name, (pairs, dt) in cases.items():
+        frame = spark.createDataFrame(
+            [(bytearray(a), bytearray(b)) if dt == "binary" else (a, b) for a, b in pairs],
+            f"src {dt}, dst {dt}",
+        )
+        want = _bfs_closure([(_hashable(a), _hashable(b)) for a, b in pairs])
+        assert _tc_pairs(frame, small_graph_threshold=0) == want, name
+        assert _tc_pairs(frame) == want, name
+
+
+def test_tc_rounds_stop_without_confirming_round(spark, caplog):
+    """After round k the closure holds every pair within 2^k steps; no pair
+    at length exactly 2^k ends the loop, so a 7-edge chain closes in 3
+    rounds and an 8-edge chain needs a 4th."""
+    import logging
+
+    for n, rounds in ((7, 3), (8, 4)):
+        edges = spark.createDataFrame([(i, i + 1) for i in range(n)], "src long, dst long")
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger="nemo_spark.graph"):
+            got = transitive_closure(edges, small_graph_threshold=0).count()
+        assert got == n * (n + 1) // 2
+        assert sum("tc doubling round" in r.getMessage() for r in caplog.records) == rounds, n
+
+
+def test_tc_array_keys_built_by_projection(spark):
+    """Array keys computed by a projection close on the distributed path
+    (an anti-join against the closure once failed in Spark's optimizer
+    here, ``NoSuchElementException`` in ``UnionBase.rewriteConstraints``)."""
+    base = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src long, dst long")
+    for width in (1, 2):
+        edges = base.selectExpr(f"array_repeat(src, {width}) AS src", f"array_repeat(dst, {width}) AS dst")
+        got = {(r.src[0], r.dst[0]) for r in transitive_closure(edges, small_graph_threshold=0).collect()}
+        assert got == {(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}, width
+    edges = base.selectExpr("array(src, src) AS src", "array(dst) AS dst")
+    got = {(tuple(r.src), tuple(r.dst)) for r in transitive_closure(edges, small_graph_threshold=0).collect()}
+    assert got == {((1, 1), (2,)), ((2, 2), (3,)), ((3, 3), (4,))}
+
+
+def test_tc_max_rounds_fails_loudly(spark):
+    """A round cap that leaves pairs to extend raises instead of returning
+    a truncated closure."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
+    with pytest.raises(ValueError, match="did not converge in 1 rounds"):
+        transitive_closure(edges, max_rounds=1, small_graph_threshold=0)
+    assert transitive_closure(edges, max_rounds=3, small_graph_threshold=0).count() == 15
+
+
+def test_local_tc_pair_budget_falls_back(spark, monkeypatch):
+    """The driver-local closure stops at its pair budget inside a source's
+    BFS and hands a pathological chain to the distributed path."""
+    from nemo_spark.ops import graph
+
+    monkeypatch.setattr(graph, "_LOCAL_TC_MAX_PAIRS", 50)
+    n = 20
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n)], "src long, dst long")
+    out = transitive_closure(edges)
+    assert not getattr(out, "_nemo_local", False)
+    assert {(r.src, r.dst) for r in out.collect()} == {(i, j) for i in range(n) for j in range(i + 1, n + 1)}
+    # one source whose reach alone overshoots the budget never finishes its BFS
+    assert graph._local_tc(spark, [(i, i + 1) for i in range(100)], None, "src", "dst") is None
