@@ -13,13 +13,14 @@ DataFrames:
   AQE pick physical strategies.
 - ``nemo_spark.functions``— nemo's scalar-function semantics (error = no result)
   on Spark Columns (mirrors ``operation_kind.rs`` / ``nemo-physical/src/function``).
-- ``nemo_spark.sources``  — DSV / N-Triples / JSON / inline fact sources
-  (mirrors ``nemo/src/io/formats``).
+- ``nemo_spark.sources``  — typed DSV / RDF / JSON / SPARQL readers that
+  ``@import`` runs (mirrors ``nemo/src/io/formats``).
 - ``nemo_spark.kg``       — the KG-construction pipeline: transcript triple
-  extraction, entity linking, hash-min canonicalization, fixpoint materialize,
+  extraction, entity linking, connected-component canonicalization (star CC,
+  driver-local union-find for small graphs), fixpoint materialize,
   checkpoint + lineage.
 - ``nemo_spark.ops``      — large-scale data-pipeline operators (dedup families,
-  similarity search, text analysis, multimodal plumbing).
+  similarity search, text analysis, transitive closure).
 """
 
 from nemo_spark.model.rules import Var, Atom, Rule, Program, agg

@@ -1,15 +1,11 @@
 """Iceberg-backed storage, behind a runtime feature probe.
 
 The north-rule storage substrate is an Iceberg catalog: fixpoint snapshots
-as Iceberg table versions and bucketed dedup history as a
-``bucket(N, ...)``-partitioned table (storage-partitioned joins then give
-the same no-Exchange anti-join the parquet ``bucketBy`` layout gives in
-this sandbox). This container ships no Iceberg runtime jar, so everything
-here is gated on :func:`iceberg_available`: with the jar + a configured
-catalog the Iceberg paths activate; without, callers keep the documented
-parquet managed-table stand-ins (``CheckpointStore``,
-``SemiNaiveEngine._merge_bucketed``) whose layout mirrors Iceberg's
-snapshot/bucket model 1:1 (see COVERAGE.md).
+as Iceberg table versions. No Iceberg runtime jar ships with this package,
+so everything here is gated on :func:`iceberg_available`: with the jar + a
+configured catalog the Iceberg store activates; without, callers keep the
+parquet stand-in ``CheckpointStore``, whose layout mirrors Iceberg's
+snapshot model (see COVERAGE.md).
 
 To activate on a cluster::
 
@@ -182,20 +178,3 @@ class IcebergCheckpointStore:
             .orderBy("step")
             .collect()
         ]
-
-
-def iceberg_history_table(
-    spark: SparkSession, catalog: str, name: str, cols: list[str], buckets: int
-) -> str:
-    """Create the Iceberg equivalent of the engine's bucketed dedup-history
-    layout: ``PARTITIONED BY (bucket(N, c0))``. With
-    ``spark.sql.sources.v2.bucketing.enabled`` Spark's storage-partitioned
-    join reads it co-partitioned — the same no-Exchange anti-join the
-    parquet ``bucketBy`` stand-in is plan-asserted to produce."""
-    tbl = f"{catalog}.{name}"
-    col_ddl = ", ".join(f"{c} string" for c in cols)  # caller-managed types
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {tbl} ({col_ddl}) USING iceberg "
-        f"PARTITIONED BY (bucket({buckets}, {cols[0]}))"
-    )
-    return tbl

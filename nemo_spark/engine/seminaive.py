@@ -142,7 +142,6 @@ class SemiNaiveEngine:
         bucket_history_threshold: int = 1_000_000,  # rows before a predicate's history migrates to the bucketed layout (0 = from the first merge)
         local_stratum_threshold: int = 100_000,  # size-adaptive local fixpoint (0 = always distributed)
         semi_join_reduction: int = 2_000_000,  # rows before a body atom gets semi-join-reduced (0 = never)
-        semi_join_reduction_shuffle: bool = False,  # allow non-broadcast (shuffled) reducers
     ) -> None:
         self.spark = spark
         self.broadcast_threshold = broadcast_threshold
@@ -190,19 +189,16 @@ class SemiNaiveEngine:
         # intermediates larger than the output; the reducer bounds each
         # input by the other relations' key sets before any shuffle join.
         self.semi_join_reduction = semi_join_reduction
-        # semi_join_reduction_shuffle: by default only broadcastable atoms
-        # serve as reducers (the semi-join is then shuffle-free on the big
-        # side) — EXCEPT for the all-big cyclic case (triangles over huge
-        # relations, the query class the reference's WCOJ exists for,
-        # nemo-physical/src/tabular/operations/join.rs:196), where shuffled
-        # left-semi reducers AUTO-ENGAGE: a body with >= 2 atoms above the
-        # broadcast threshold whose hypergraph is cyclic (GYO-irreducible)
-        # would otherwise build binary-join intermediates larger than the
-        # output. Each shuffled semi-join costs one exchange of the reduced
-        # atom but caps the join intermediate at the (much smaller) reduced
-        # size. Setting the flag True forces shuffled reducers for EVERY
-        # reduced body, cyclic or not.
-        self.semi_join_reduction_shuffle = semi_join_reduction_shuffle
+        # Only broadcastable atoms serve as reducers (the semi-join is then
+        # shuffle-free on the big side) — EXCEPT for the all-big cyclic case
+        # (triangles over huge relations, the query class the reference's
+        # WCOJ exists for, nemo-physical/src/tabular/operations/join.rs:196),
+        # where shuffled left-semi reducers engage: a body with >= 2 atoms
+        # above the broadcast threshold whose hypergraph is cyclic
+        # (GYO-irreducible) would otherwise build binary-join intermediates
+        # larger than the output. Each shuffled semi-join costs one exchange
+        # of the reduced atom but caps the join intermediate at the (much
+        # smaller) reduced size.
         if chase not in ("restricted", "skolem"):
             raise ValueError(f"unknown chase variant: {chase}")
         self.chase = chase
@@ -965,10 +961,10 @@ class SemiNaiveEngine:
             if a.pred not in self._deferred or a.pred in self._tables
         ]
         order = eager + [i for i in range(len(rule.body)) if i not in set(eager)]
-        # shuffled reducers: forced by the flag, or auto-engaged for the
-        # all-big cyclic body (see __init__) — the decision is per rule
-        # application so it tracks the tables' current sizes
-        reduce_shuffle = self.semi_join_reduction_shuffle or (
+        # shuffled reducers engage for the all-big cyclic body (see
+        # __init__) — the decision is per rule application so it tracks the
+        # tables' current sizes
+        reduce_shuffle = (
             bool(self.semi_join_reduction)
             and len(rule.body) >= 3
             and sum(
@@ -1161,7 +1157,7 @@ class SemiNaiveEngine:
         delta: dict[str, DataFrame],
         delta_counts: dict[str, int],
         use_delta_atom: int | None,
-        allow_shuffle: bool = False,
+        allow_shuffle: bool,
     ) -> DataFrame:
         """Yannakakis-style semi-join reduction of one large body atom (see
         ``semi_join_reduction`` in ``__init__``): semi-join its frame by the
@@ -1187,7 +1183,7 @@ class SemiNaiveEngine:
                 continue
             broadcastable = ocnt <= self.broadcast_threshold
             if not broadcastable and not allow_shuffle:
-                continue  # default: only cheap (broadcastable) reducers
+                continue  # only cheap (broadcastable) reducers
             shared = [v.name for v in _uniq(other.variables()) if v.name in my_vars]
             if not shared:
                 continue

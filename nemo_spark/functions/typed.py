@@ -844,20 +844,3 @@ def t_cast_iri(a: Column) -> Column:
         .when(vt(a) == T_STRING, wrap_iri(vs(a)))
         .otherwise(NULLV())
     )
-
-
-# DSV 'anything' decoding happens driver-side in values.parse_dsv_any and
-# inside the Arrow-batched readers; an earlier Catalyst-expression variant
-# (decode_any_col) was removed — it had no callers and its corner-case
-# semantics (xsd range checks, decimal normalization) had drifted from the
-# canonical parser, so the same cell could decode to structurally unequal
-# values depending on the ingestion path.
-def dsv_any_col(a: Column) -> Column:
-    """DSV 'anything' export serialization (integers plain, strings quoted,
-    IRIs bare, everything else canonical)."""
-    return (
-        F.when(vt(a) == T_INT, vi(a).cast("string"))
-        .when(vt(a) == T_ULONG, (vi(a).cast("decimal(38,0)") + F.lit(str(1 << 64)).cast("decimal(38,0)")).cast("string"))
-        .when(vt(a) == T_IRI, vs(a))
-        .otherwise(canonical_col(a))
-    )

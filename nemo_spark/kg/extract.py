@@ -15,8 +15,8 @@ match semantics, each a single Arrow-batched Python<->JVM crossing:
   pipeline's two RE2 projections :func:`extract_turn_features_arrow` (per-turn
   features) and :func:`extract_alias_triples_arrow` (per-batch-distinct
   triples), and the span kernel :func:`extract_mentions_pandas`
-  (``kg_mentions``). :func:`extract_turn_features_pandas` is kept only as the
-  reference the Arrow features kernel is tested against.
+  (``kg_mentions``). A pandas/Python-``re`` twin of the features kernel lives
+  in ``tests/test_ops.py`` as its value-for-value reference.
 
 Every pattern has ASCII semantics (``[0-9]`` digits, ``re.ASCII`` for
 ``\\b``): RE2 (``pyarrow.compute``, DuckDB) reads ``\\d``/``\\b`` as ASCII, so
@@ -108,60 +108,11 @@ _LANG_RES = {
 }
 
 
-def extract_turn_features_pandas(transcripts: DataFrame) -> DataFrame:
-    """One-pass per-turn extraction: relation triple + mention count + token /
-    stopword counts + quality ratio + language-ID + content fingerprint.
-
-    The pandas/Python-``re`` reference for :func:`extract_turn_features_arrow`
-    (the pipeline's kernel), which ``test_feature_extractors_identical``
-    compares it against value for value; nothing else calls it."""
-    triple_pat = re.compile(MENTION_RE)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # null text = empty turn, EXPLICITLY (both feature extractors
-            # share this contract): no triple, zero counts, lang 'unk',
-            # fp = hash("") — NaN propagation would otherwise leak nulls
-            # into int columns and diverge between the two implementations
-            t = pdf["text"].fillna("")
-            hits = t.str.extract(triple_pat)
-            hits.columns = ["subj_alias", "pred", "obj_alias"]
-            out = pd.concat([pdf[["conv_id", "turn_idx"]], hits], axis=1)
-            n_tokens = t.str.count(" ").add(1)
-            n_stop = t.str.count(_STOPWORD_RE)
-            out["n_tokens"] = n_tokens
-            out["n_mentions"] = t.str.count(_MENTION_ONLY_RE)
-            out["n_stopwords"] = n_stop
-            out["quality"] = (n_stop / n_tokens).clip(0.0, 1.0)
-            scores = np.stack([t.str.count(rx).to_numpy() for rx in _LANG_RES.values()])
-            langs = np.asarray(list(_LANG_RES))
-            best = scores.argmax(axis=0)
-            out["lang"] = np.where(scores.max(axis=0) > 0, langs[best], "unk")
-            # 64-bit content fingerprint for turn-level exact dedup —
-            # computed JVM-side (xxhash64 in whole-stage codegen) and
-            # forwarded: hashing inside Python materialized every text as a
-            # PyObject, the single biggest memory-bus segment of the stage
-            out["fp"] = pdf["fp"]
-            # EVERY turn keeps its feature row — turns without a relation
-            # sentence carry null triple columns. Dropping them here would
-            # silently lose the quality/langid/dedup-fingerprint features of
-            # all non-relation turns on real corpora (the triples consumer
-            # filters subj_alias itself; the synthetic corpus plants a
-            # relation per turn, which is how this masked as harmless)
-            yield out
-
-    return _with_fp(transcripts).mapInPandas(extract, schema=TURN_FEATURES_SCHEMA)
-
-
 def extract_turn_features_arrow(transcripts: DataFrame) -> DataFrame:
     """Arrow-native one-pass feature extractor — same columns and VALUES as
-    :func:`extract_turn_features_pandas` (``exceptAll`` empty both ways in
-    ``test_feature_extractors_identical``), ~2x faster at 2M turns (measured
-    0.94 s vs 1.94 s per pass at local[32]).
+    the pandas reference in ``tests/test_ops.py`` (``exceptAll`` empty both
+    ways in ``test_feature_extractors_identical``), ~2x faster at 2M turns
+    (measured 0.94 s vs 1.94 s per pass at local[32]).
 
     Why: the pandas path runs seven Python-regex passes over object-dtype
     strings (pandas ``.str`` ops loop per row under the hood). Here every

@@ -175,12 +175,6 @@ class Rule:
             raise ValueError("aggregates require a single head atom")
         return aggs[0] if aggs else None
 
-    def body_predicates(self) -> set[str]:
-        return {a.pred for a in self.body}
-
-    def negated_predicates(self) -> set[str]:
-        return {a.pred for a in self.negated}
-
 
 def rule_label(rule: "Rule", index: int) -> str:
     """Stable display label: the rule's name, or ``rule_{index}`` where

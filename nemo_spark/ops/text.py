@@ -73,10 +73,6 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def stopword_count(text: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    return F.size(F.filter(tokens(text), lambda x: _token_key(x).isin(*stopwords))).cast("long")
-
-
 def _with_stopword_counts(df: DataFrame, text_col: str) -> DataFrame:
     """n_tokens / n_stopwords via ONE token-array evaluation: the array
     lands in its own projection (Catalyst won't inline a non-cheap alias

@@ -1,3 +1,3 @@
-from nemo_spark.sources import dsv, json_source, rdf, sparql
+from nemo_spark.sources import sparql
 
-__all__ = ["dsv", "json_source", "rdf", "sparql"]
+__all__ = ["sparql"]

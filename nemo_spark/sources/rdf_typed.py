@@ -1,11 +1,12 @@
-"""RDF import into typed value structs (N-Triples / N-Quads).
+"""RDF import and export over typed value structs — the parser-driven
+engine's one RDF path.
 
-Typed counterpart of :mod:`nemo_spark.sources.rdf` for the parser-driven
-engine: terms become proper Values (IRI / labeled null for blank nodes /
-typed literals via the shared literal constructors), matching nemo's RDF
-reader (``nemo/src/io/formats/rdf/reader.rs``). Turtle / RDF-XML / TriG
-require full grammar parsers and are not supported here (reference lists
-them; the tested corpus beyond these two is small)."""
+Terms become proper Values (IRI / labeled null for blank nodes / typed
+literals via the shared literal constructors), matching nemo's RDF reader
+(``nemo/src/io/formats/rdf/reader.rs``). N-Triples / N-Quads parse per line;
+Turtle / TriG / RDF-XML parse per document with a grammar subset that covers
+the reference's test corpus. :func:`serialize_rdf_typed` writes all five
+variants with the reference writer's drop semantics."""
 
 from __future__ import annotations
 

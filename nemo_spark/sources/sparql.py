@@ -76,13 +76,6 @@ def _sparql_request(endpoint: str, query: str) -> urllib.request.Request:
     )
 
 
-def fetch_sparql_tsv(endpoint: str, query: str, timeout: float = 120.0) -> str:
-    """One SPARQL protocol exchange; returns the raw TSV body (small-result
-    convenience — the import path streams to files instead)."""
-    with urllib.request.urlopen(_sparql_request(endpoint, query), timeout=timeout) as resp:
-        return resp.read().decode("utf-8")
-
-
 _CHUNK = 1 << 20  # streaming read granularity: driver memory per page is O(this)
 _HEADER_LIMIT = 8 << 20  # max bytes scanned for the TSV header line
 _staging_dirs: list[str] = []

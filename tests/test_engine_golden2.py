@@ -447,8 +447,8 @@ def test_semi_join_reduction_shuffled_all_big(spark):
         eng = SemiNaiveEngine(
             spark,
             semi_join_reduction=1 if reduce_ else 0,
-            # note: semi_join_reduction_shuffle stays at its default (False);
-            # the cyclic-body auto-engage is what must allow shuffled reducers
+            # no option forces shuffled reducers: the cyclic-body
+            # auto-engage is what must allow them
             broadcast_threshold=1,  # nothing is broadcastable
             local_stratum_threshold=0,
         )

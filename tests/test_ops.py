@@ -455,15 +455,75 @@ def test_turn_features_keep_non_relation_turns(spark):
     assert by_idx[1].n_tokens == 5 and by_idx[1].fp is not None
 
 
+def extract_turn_features_pandas(transcripts):
+    """One-pass per-turn extraction: relation triple + mention count + token /
+    stopword counts + quality ratio + language-ID + content fingerprint.
+
+    The pandas/Python-``re`` reference for ``extract_turn_features_arrow``
+    (the pipeline's kernel), which ``test_feature_extractors_identical``
+    compares it against value for value."""
+    import re
+    from collections.abc import Iterator
+
+    import pandas as pd
+
+    from nemo_spark.kg.extract import (
+        _LANG_RES,
+        _MENTION_ONLY_RE,
+        _STOPWORD_RE,
+        MENTION_RE,
+        TURN_FEATURES_SCHEMA,
+        _with_fp,
+    )
+
+    triple_pat = re.compile(MENTION_RE)
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            # null text = empty turn, EXPLICITLY (both feature extractors
+            # share this contract): no triple, zero counts, lang 'unk',
+            # fp = hash("") — NaN propagation would otherwise leak nulls
+            # into int columns and diverge between the two implementations
+            t = pdf["text"].fillna("")
+            hits = t.str.extract(triple_pat)
+            hits.columns = ["subj_alias", "pred", "obj_alias"]
+            out = pd.concat([pdf[["conv_id", "turn_idx"]], hits], axis=1)
+            n_tokens = t.str.count(" ").add(1)
+            n_stop = t.str.count(_STOPWORD_RE)
+            out["n_tokens"] = n_tokens
+            out["n_mentions"] = t.str.count(_MENTION_ONLY_RE)
+            out["n_stopwords"] = n_stop
+            out["quality"] = (n_stop / n_tokens).clip(0.0, 1.0)
+            scores = np.stack([t.str.count(rx).to_numpy() for rx in _LANG_RES.values()])
+            langs = np.asarray(list(_LANG_RES))
+            best = scores.argmax(axis=0)
+            out["lang"] = np.where(scores.max(axis=0) > 0, langs[best], "unk")
+            # 64-bit content fingerprint for turn-level exact dedup —
+            # computed JVM-side (xxhash64 in whole-stage codegen) and
+            # forwarded: hashing inside Python materialized every text as a
+            # PyObject, the single biggest memory-bus segment of the stage
+            out["fp"] = pdf["fp"]
+            # EVERY turn keeps its feature row — turns without a relation
+            # sentence carry null triple columns. Dropping them here would
+            # silently lose the quality/langid/dedup-fingerprint features of
+            # all non-relation turns on real corpora (the triples consumer
+            # filters subj_alias itself; the synthetic corpus plants a
+            # relation per turn, which is how this masked as harmless)
+            yield out
+
+    return _with_fp(transcripts).mapInPandas(extract, schema=TURN_FEATURES_SCHEMA)
+
+
 def test_feature_extractors_identical(spark):
     """The Arrow/RE2 feature extractor (pipeline default) must be a value
     drop-in for the pandas one on every column, including edge turns:
     multilingual text, ties in language scores, relation-free turns, and
     empty-ish strings."""
-    from nemo_spark.kg.extract import (
-        extract_turn_features_arrow,
-        extract_turn_features_pandas,
-    )
+    from nemo_spark.kg.extract import extract_turn_features_arrow
     from nemo_spark.kg.transcripts import synth_transcripts
 
     tr = synth_transcripts(spark, 20_000)

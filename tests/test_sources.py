@@ -1,42 +1,69 @@
-"""Source/sink tests: DSV value formats, N-Triples round-trip, JSON."""
+"""Source/sink tests: the typed DSV, RDF and JSON readers and the export
+encoders ``RlsRunner`` runs."""
 
 from __future__ import annotations
 
 import gzip
-import os
 import re
 
 from pyspark.sql import functions as F
 
-from nemo_spark.sources.dsv import read_dsv, write_dsv
-from nemo_spark.sources.json_source import from_json_column, read_json_facts
-from nemo_spark.sources.rdf import read_ntriples, write_ntriples
+from nemo_spark.model.values import T_NULL, Value
+from nemo_spark.sources.dsv_typed import read_dsv_typed
+from nemo_spark.sources.rdf_typed import read_rdf_typed, serialize_rdf_typed
+
+
+def _values(df):
+    return {tuple(Value.from_cell(c) for c in r) for r in df.collect()}
 
 
 def test_dsv_anything_and_typed(spark, tmp_path):
     p = tmp_path / "data.csv"
     p.write_text("1,foo,2.5\nx,bar,zzz\n3,baz,4.0\n")
-    # anything: keeps lexical form
-    df = read_dsv(spark, str(p), 3)
-    assert {tuple(r) for r in df.collect()} == {("1", "foo", "2.5"), ("x", "bar", "zzz"), ("3", "baz", "4.0")}
+    # any: nemo parses the lexical form, so "4.0" is the integer 4
+    got = {tuple(v.lexical() for v in r) for r in _values(read_dsv_typed(spark, str(p), ["any"] * 3))}
+    assert got == {("1", "foo", "2.5"), ("x", "bar", "zzz"), ("3", "baz", "4")}
+    anys = _values(read_dsv_typed(spark, str(p), ["any", "skip", "skip"]))
+    assert anys == {(Value.int(1),), (Value.iri("x"),), (Value.int(3),)}
     # int format: unparseable row dropped (nemo error-is-no-result)
-    df2 = read_dsv(spark, str(p), 3, formats=["int", "string", "double"])
-    assert {tuple(r) for r in df2.collect()} == {(1, "foo", 2.5), (3, "baz", 4.0)}
+    typed = _values(read_dsv_typed(spark, str(p), ["int", "string", "double"]))
+    assert typed == {
+        (Value.int(1), Value.string("foo"), Value.double(2.5)),
+        (Value.int(3), Value.string("baz"), Value.double(4.0)),
+    }
     # skip column
-    df3 = read_dsv(spark, str(p), 3, formats=["anything", "skip", "anything"])
-    assert df3.columns == ["c0", "c1"]
+    assert read_dsv_typed(spark, str(p), ["any", "skip", "any"]).columns == ["c0", "c1"]
 
 
 def test_dsv_gzip_and_roundtrip(spark, tmp_path):
-    gz = tmp_path / "data.csv.gz"
-    with gzip.open(gz, "wt") as f:
-        f.write("a,1\nb,2\n")
-    df = read_dsv(spark, str(gz), 2)
-    assert df.count() == 2
+    """A gzipped file imports exactly as its plain twin, on the line path
+    and on the per-file multiline reader; an @export of the import reads
+    back as the same values."""
+    import glob
+
+    from nemo_spark.parser.runner import RlsRunner
+
+    text = 'a,1\n"b c",2\n<http://ex.org/x>,-3\n"q""uote",4.5\n'
+    (tmp_path / "plain.csv").write_text(text)
+    with gzip.open(tmp_path / "data.csv.gz", "wt") as f:
+        f.write(text)
+    fmts = ["any", "any"]
+    want = _values(read_dsv_typed(spark, str(tmp_path / "plain.csv"), fmts))
+    assert len(want) == 4
+    for multiline in ("auto", True):
+        gz = read_dsv_typed(spark, str(tmp_path / "data.csv.gz"), fmts, multiline=multiline)
+        assert _values(gz) == want, multiline
+
+    src = """
+@import d :- csv{resource="data.csv.gz", format=(any, any)} .
+@export d :- csv{} .
+"""
     out = tmp_path / "out"
-    write_dsv(df, str(out))
-    back = read_dsv(spark, str(out), 2)
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
+    with RlsRunner(spark, source=src, workdir=str(tmp_path)) as r:
+        r.run()
+        r.write_exports(str(out))
+    (exported,) = glob.glob(str(out / "d.csv"))
+    assert _values(read_dsv_typed(spark, exported, fmts)) == want
 
 
 NT = """
@@ -49,40 +76,35 @@ malformed line without triple
 """
 
 
+def _masked(rows):
+    """Rows with blank-node labels masked: labels are scoped per document,
+    so a re-import renames them (one blank node here, so masking loses no
+    structure)."""
+    return {tuple(Value.null("_") if v.t == T_NULL else v for v in r) for r in rows}
+
+
 def test_ntriples_parse(spark, tmp_path):
     p = tmp_path / "t.nt"
     p.write_text(NT)
-    df = read_ntriples(spark, str(p))
-    rows = {tuple(r) for r in df.collect()}
-    assert ("http://ex.org/a", "http://ex.org/knows", "http://ex.org/b") in rows
-    assert ("http://ex.org/b", "http://ex.org/name", '"Bob"') in rows
-    assert ("http://ex.org/c", "http://ex.org/age", '"42"^^<http://www.w3.org/2001/XMLSchema#integer>') in rows
-    assert ("_:blank1", "http://ex.org/p", '"hi"@en') in rows
-    assert len(rows) == 4  # malformed + comment skipped
+    rows = _values(read_rdf_typed(spark, str(p), "ntriples"))
+    iri = Value.iri
+    assert _masked(rows) == {
+        (iri("http://ex.org/a"), iri("http://ex.org/knows"), iri("http://ex.org/b")),
+        (iri("http://ex.org/b"), iri("http://ex.org/name"), Value.string("Bob")),
+        (iri("http://ex.org/c"), iri("http://ex.org/age"), Value.int(42)),
+        (Value.null("_"), iri("http://ex.org/p"), Value.lang_string("hi", "en")),
+    }  # malformed line and comment skipped
 
 
 def test_ntriples_roundtrip(spark, tmp_path):
     p = tmp_path / "t.nt"
     p.write_text(NT)
-    df = read_ntriples(spark, str(p))
+    df = read_rdf_typed(spark, str(p), "ntriples")
     out = tmp_path / "out_nt"
-    write_ntriples(df, str(out))
-    back = read_ntriples(spark, str(out))
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
-
-
-def test_json_facts(spark, tmp_path):
-    p = tmp_path / "f.jsonl"
-    p.write_text('{"a": 1, "b": {"c": "x"}}\n{"a": 2, "b": {"c": "y"}}\n')
-    df = read_json_facts(spark, str(p), ["a", "b.c"])
-    assert {tuple(r) for r in df.collect()} == {(1, "x"), (2, "y")}
-
-
-def test_from_json_column(spark, sf_dir="/root/testdata/sf0.001"):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    parsed = from_json_column(ev, "props", "k int")
-    row = parsed.select(F.col("props_parsed.k").alias("k")).filter(F.col("k").isNotNull()).first()
-    assert row is not None
+    serialize_rdf_typed(df, "ntriples").write.text(str(out))
+    back = _values(read_rdf_typed(spark, str(out), "ntriples"))
+    assert len(back) == 4
+    assert _masked(back) == _masked(_values(df))
 
 
 def test_turtle_blank_nodes_scoped(spark, tmp_path):
@@ -442,6 +464,10 @@ def test_dsv_typed_decoders_match_python_parsers(spark, tmp_path):
         ("1\t2.5\tx y\n2\t-3e2\tü,v\n3\t4\n", ["int", "double", "string"], "\t", True),
         ('1,"a"\n2,b"c\n3,""\n', ["int", "string"], ",", False),
         ("-12,1e3,ümläut\n+4,.25,\n", ["int", "double", "string"], ",", True),
+        # an unparseable int or double drops the row; skip drops the column
+        ("1,foo,2.5\nx,bar,zzz\n3,baz,4.0\n", ["int", "string", "double"], ",", True),
+        ("1,foo,2.5\nx,bar,zzz\n3,baz,4.0\n", ["int", "skip", "double"], ",", True),
+        ("1,foo,2.5\nx,bar,zzz\n3,baz,4.0\n", ["skip", "string", "skip"], ",", True),
     ]
     for k, (text, formats, delimiter, quoting) in enumerate(cases):
         p = tmp_path / f"f{k}.csv"

@@ -1,13 +1,8 @@
-"""Incremental/streaming fixpoint maintenance + multimodal plumbing."""
+"""Incremental/streaming fixpoint maintenance."""
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import functions as F
-
 from nemo_spark import Atom, Program, Rule, SemiNaiveEngine, Var
-from nemo_spark.ops.multimodal import extract_features, resize_metadata, synth_assets
 from nemo_spark.streaming.incremental import stream_facts_into
 
 X, Y, Z = Var("X"), Var("Y"), Var("Z")
@@ -62,68 +57,9 @@ def test_streaming_facts(spark, tmp_path):
     assert got == _tc({(1, 2), (2, 3), (3, 4)})
 
 
-def test_multimodal_features(spark):
-    assets = synth_assets(spark, 300)
-    feats = extract_features(assets)
-    rows = feats.collect()
-    assert len(rows) == 300
-    assert all(r.ok for r in rows)
-    assert all(len(r.feat) == 32 for r in rows)
-    video_frames = {r.asset_id: r.n_frames for r in rows if r.modality == "video"}
-    assert video_frames and all(n >= 1 for n in video_frames.values())
-    # deterministic: same input -> same features
-    again = {r.asset_id: r.feat for r in extract_features(assets).collect()}
-    sample = rows[0]
-    assert again[sample.asset_id] == sample.feat
 
 
-def test_multimodal_resize_plan(spark):
-    assets = synth_assets(spark, 200)
-    plan = resize_metadata(assets, max_side=256)
-    bad = plan.filter(
-        (F.greatest("target_w", "target_h") > 256)
-        | ((F.col("needs_resize") == False) & ((F.col("target_w") != F.col("width"))))  # noqa: E712
-    )
-    assert bad.isEmpty()
 
-
-def test_extract_features_null_duration(spark):
-    """A video asset with NULL duration_ms (NaN in pandas) must sample one
-    frame, not crash the stage with int(NaN)."""
-    from nemo_spark.ops.multimodal import extract_features
-
-    assets = spark.createDataFrame(
-        [(1, "video", None, bytearray(b"\x00\x01")), (2, "image", None, bytearray(b"\x02"))],
-        "asset_id long, modality string, duration_ms long, payload binary",
-    )
-    rows = {r.asset_id: r for r in extract_features(assets).collect()}
-    assert rows[1].ok and rows[1].n_frames == 1
-    assert rows[2].ok and rows[2].n_frames == 1
-
-
-def test_extract_features_null_payload(spark):
-    """A NULL payload (corrupt upstream asset) degrades to ok=False — one
-    bad asset must not abort the whole mapInPandas stage."""
-    assets = spark.createDataFrame(
-        [(1, "image", 100, None), (2, "image", 100, bytearray(b"\x02"))],
-        "asset_id long, modality string, duration_ms long, payload binary",
-    )
-    rows = {r.asset_id: r for r in extract_features(assets).collect()}
-    assert rows[1].ok is False and rows[1].feat is None
-    assert rows[2].ok is True
-
-
-def test_resize_plan_zero_dimensions(spark):
-    """width=height=0 (or NULL) must not raise DIVIDE_BY_ZERO under Spark
-    4's default ANSI mode; such assets get scale 1.0 / no resize."""
-    assets = spark.createDataFrame(
-        [(1, 0, 0), (2, None, None), (3, 1024, 512)],
-        "asset_id long, width int, height int",
-    )
-    rows = {r.asset_id: r for r in resize_metadata(assets, max_side=256).collect()}
-    assert rows[1].needs_resize is False and rows[1].target_w == 0
-    assert rows[2].needs_resize is False
-    assert rows[3].needs_resize is True and rows[3].target_w == 256
 
 
 def test_streaming_restart_resumes_from_store(spark, tmp_path):
@@ -178,10 +114,3 @@ def test_stream_store_names_disjoint_per_query(tmp_path):
     # explicit store_name always wins; no checkpoint = legacy bare name
     assert _store_name("edge", "mine", str(tmp_path / "ckptA")) == "mine"
     assert _store_name("edge", None, None) == "stream_edge"
-
-
-def test_resize_plan_extreme_aspect_ratio(spark):
-    # 1x2000 at max_side 512: a truncating cast plans a 0-width resize
-    assets = spark.createDataFrame([(9, 1, 2000)], "asset_id long, width int, height int")
-    r = resize_metadata(assets, max_side=512).collect()[0]
-    assert r.needs_resize is True and r.target_w >= 1 and r.target_h == 512
