@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from nemo_spark.engine.stratify import stratify
 from nemo_spark.model.rules import Aggregate, Atom, EVar, Program, Rule, Var
-from nemo_spark.session import run_concurrently
+from nemo_spark.session import local_frame, observed_checkpoint, run_concurrently
 
 log = logging.getLogger("nemo_spark.engine")
 
@@ -288,8 +288,9 @@ class SemiNaiveEngine:
         scan; it filters the materialized rows instead.
 
         Validation and engine bookkeeping run on the calling thread; only
-        the materializations (a lazy checkpoint and its ``count()``, one
-        per relation) are submitted together (:func:`run_concurrently`)."""
+        the materializations (one :func:`observed_checkpoint` per relation,
+        whose observation is the row count) are submitted together
+        (:func:`run_concurrently`)."""
         for pred in frames:
             if pred in self._deferred:
                 # a deferred import's rows would silently vanish behind the
@@ -312,8 +313,8 @@ class SemiNaiveEngine:
 
         def materialize(item):
             pred, df = item
-            df = df.toDF(*_cols(len(df.columns))).dropDuplicates().localCheckpoint(eager=False)
-            return pred, df, df.count()
+            df, seen = observed_checkpoint(df.toDF(*_cols(len(df.columns))).dropDuplicates())
+            return pred, df, seen["rows"]
 
         for pred, df, cnt in run_concurrently(self.spark, materialize, frames.items()):
             self._tables[pred] = df
@@ -532,24 +533,16 @@ class SemiNaiveEngine:
             )
 
         # inline facts (nemo: SimpleTable, management/database/sources.rs:14)
+        # are a set like every other table: they enter through the merge
+        # path derived facts use (dedup, anti-join against what the
+        # predicate already holds, one observed checkpoint), which also
+        # appends to a managed history table when the predicate has one
         for p, rows in program.facts.items():
             df = self.spark.createDataFrame(rows, _cols(self._arity[p]))
-            if p in self._history_tables:
-                # the predicate's state lives in the managed history table:
-                # a memory-only union would be REPLACED by spark.table(tbl)
-                # on the next bucketed merge, silently dropping these facts —
-                # append them through the same merge path derived facts use
-                self._merge(p, df)
-            else:
-                self._tables[p] = (
-                    self._tables[p].unionByName(df).dropDuplicates() if p in self._tables else df
-                )
-                self._table_counts[p] = self._tables[p].count()
+            self._merge(p, df)
             self._base_tables[p] = (
-                self._base_tables[p].unionByName(df).dropDuplicates()
-                if p in self._base_tables
-                else df
-            )
+                self._base_tables[p].unionByName(df) if p in self._base_tables else df
+            ).dropDuplicates()
 
         for stratum_idx, rules in enumerate(stratify(program)):
             self._run_stratum(stratum_idx, rules)
@@ -896,22 +889,8 @@ class SemiNaiveEngine:
             # local pass (engine state untouched) and run distributed
             return False
         for pred, rows in derived.items():
-            if not rows:
-                continue
-            schema = self._schemas.get(pred)
-            if schema is None:
-                if typed:
-                    from nemo_spark.model.values import VALUE_SCHEMA
-
-                    schema = ", ".join(f"c{i} {VALUE_SCHEMA}" for i in range(self._arity[pred]))
-                else:
-                    schema = None  # infer
-            df = (
-                self.spark.createDataFrame(list(rows), schema)
-                if schema is not None
-                else self.spark.createDataFrame(list(rows), _cols(self._arity[pred]))
-            )
-            fresh, cnt = self._merge(pred, df)
+            if rows:
+                self._merge(pred, self._local_frame(pred, rows, typed))
         # per-rule attribution (report()/timing() parity with the distributed
         # path): the local pass evaluates rule-by-rule in Python, so its
         # measured per-rule walls are real. The residual Spark collect/merge
@@ -926,14 +905,25 @@ class SemiNaiveEngine:
             # path's — trace_tree attributes rules identically whichever
             # path a stratum took (VERDICT r2 "What's wrong" #4)
             for pred, label, round_no, rows in lf.records:
-                schema = self._schemas.get(pred)
-                pf = (
-                    self.spark.createDataFrame(list(rows), schema)
-                    if schema is not None
-                    else self.spark.createDataFrame(list(rows), _cols(self._arity[pred]))
-                )
+                pf = self._local_frame(pred, rows, typed)
                 self._provenance.append((pred, label, stratum_idx, round_no, pf))
         return True
+
+    def _local_frame(self, pred: str, rows, typed: bool) -> DataFrame:
+        """Rows a local stratum derived for ``pred``, handed back through
+        Arrow (:func:`local_frame`) with the predicate's known schema: value
+        structs for a typed stratum, else the schema Spark infers from the
+        rows (what ``createDataFrame(list)`` would give)."""
+        rows = list(rows)
+        schema = self._schemas.get(pred)
+        if schema is None:
+            names = _cols(self._arity[pred])
+            schema = (
+                ", ".join(f"{c} {_VALUE_SCHEMA_T()}" for c in names)
+                if typed
+                else self.spark._inferSchemaFromList(rows, names=names)
+            )
+        return local_frame(self.spark, rows, schema)
 
     # ------------------------------------------------------------- rule eval
 
@@ -1264,7 +1254,7 @@ class SemiNaiveEngine:
         if key not in cache:
             mark = staging_mark()
             df = loader(None)
-            cache[key] = df.toDF(*out_names).dropDuplicates().localCheckpoint(eager=True)
+            cache[key] = observed_checkpoint(df.toDF(*out_names).dropDuplicates())[0]
             release_staging(mark)
         return cache[key], out_names
 
@@ -1289,13 +1279,13 @@ class SemiNaiveEngine:
             from nemo_spark.sources.sparql import release_staging, staging_mark
 
             mark = staging_mark()
-            df = loader(None).localCheckpoint(eager=True)
+            df, seen = observed_checkpoint(loader(None))
             # the full load is materialized: any SPARQL pages staged for it
             # are dead weight from here on
             release_staging(mark)
             self._tables[atom.pred] = df
             self._schemas.setdefault(atom.pred, df.schema)
-            self._table_counts[atom.pred] = df.count()
+            self._table_counts[atom.pred] = seen["rows"]
             # fully loaded: from here on the predicate IS a plain table
             self._deferred.pop(atom.pred, None)
             return df
@@ -1385,7 +1375,7 @@ class SemiNaiveEngine:
             guard = g if guard is None else (guard & g)
         deduped = bound.filter(guard).select(*proj).dropDuplicates() if guard is not None else bound.select(*proj).dropDuplicates()
         if _is_value_struct(deduped.schema[aggregate.var.name].dataType):
-            return self._project_aggregate_typed(deduped, head, aggregate, group_vars)
+            return self._project_aggregate_typed(bound, deduped, head, aggregate, group_vars)
         agg_col = _AGG_FN[aggregate.op](F.col(aggregate.var.name))
         if aggregate.op == "count":
             agg_col = agg_col.cast("long")
@@ -1409,15 +1399,18 @@ class SemiNaiveEngine:
         return res.select(*exprs)
 
     def _project_aggregate_typed(
-        self, deduped: DataFrame, head: Atom, aggregate: Aggregate, group_vars: list[str]
+        self, bound: DataFrame, deduped: DataFrame, head: Atom, aggregate: Aggregate,
+        group_vars: list[str],
     ) -> DataFrame:
-        """Aggregation over typed value structs. min/max order by the
-        Arrow-computed ``Value.sort_key_bytes`` (nemo's cross-domain
-        AnyDataValue order WITH element-wise tuple/map comparison — the raw
-        struct ordering would sort tuples by canonical string) via
-        ``min_by``/``max_by``; count wraps the row count as an integer
-        value; sum follows the numeric dispatch (all-int => i64, floats-only
-        => f32, otherwise f64)."""
+        """Aggregation over typed value structs. min/max are
+        ``min_by``/``max_by`` under nemo's cross-domain AnyDataValue order
+        (``Value.sort_key_bytes``): the Catalyst key :func:`_order_key_col`
+        when every aggregated value is atomic and no float is NaN, else the
+        byte key :func:`_sort_key_col` (element-wise tuple/map comparison —
+        the raw struct ordering would sort tuples by canonical string). One
+        probe job over ``bound`` picks the key. count wraps the row count as
+        an integer value; sum follows the numeric dispatch (all-int => i64,
+        floats-only => f32, otherwise f64)."""
         from nemo_spark.functions import typed as TY
         from nemo_spark.model.values import T_DOUBLE, T_FLOAT, T_INT
 
@@ -1425,7 +1418,11 @@ class SemiNaiveEngine:
         agg_alias = "__agg__"
         if aggregate.op in ("min", "max"):
             by = F.min_by if aggregate.op == "min" else F.max_by
-            aggs = [by(col, _sort_key_col(col)).alias(agg_alias)]
+            # a top-1 sort runs ONE job over every partition (limit(1) alone
+            # would scan in growing waves of jobs)
+            probe = bound.where(_needs_byte_key(col)).select(col.getField("t").alias("t"))
+            key = _sort_key_col(col) if probe.orderBy("t").limit(1).collect() else _order_key_col(col)
+            aggs = [by(col, key).alias(agg_alias)]
             wrap = F.col(agg_alias)
         elif aggregate.op == "count":
             aggs = [F.count(col).alias(agg_alias)]
@@ -1493,8 +1490,10 @@ class SemiNaiveEngine:
         """
         # localCheckpoint rather than persist: truncates the logical plan
         # every round — without this, round t's plan embeds round t-1's join
-        # trees recursively and analysis cost grows exponentially. Lazy
-        # checkpoint + count = ONE materializing job per merge.
+        # trees recursively and analysis cost grows exponentially. The fresh
+        # rows are counted by an observation of the checkpoint's own job
+        # (observed_checkpoint): one action per merge, whose AQE map stages
+        # (the dedup and anti-join exchanges) run as jobs of their own.
         if self.bucket_history and (
             pred in self._history_tables
             or self._table_counts.get(pred, 0) >= self.bucket_history_threshold
@@ -1510,16 +1509,14 @@ class SemiNaiveEngine:
             for c in existing.columns:
                 cc = F.col(f"__d.{c}").eqNullSafe(F.col(f"__e.{c}"))
                 cond = cc if cond is None else (cond & cc)
-            fresh = d.join(
-                existing.alias("__e"), on=cond, how="left_anti"
-            ).localCheckpoint(eager=False)
-            cnt = fresh.count()
+            fresh, seen = observed_checkpoint(d.join(existing.alias("__e"), on=cond, how="left_anti"))
+            cnt = seen["rows"]
             if cnt:
                 self._tables[pred] = existing.unionByName(fresh)
                 self._table_counts[pred] = self._table_counts.get(pred, 0) + cnt
         else:
-            fresh = derived.dropDuplicates().localCheckpoint(eager=False)
-            cnt = fresh.count()
+            fresh, seen = observed_checkpoint(derived.dropDuplicates())
+            cnt = seen["rows"]
             self._schemas.setdefault(pred, fresh.schema)
             if cnt:
                 self._tables[pred] = fresh
@@ -1557,8 +1554,8 @@ class SemiNaiveEngine:
             self._tables[pred] = self.spark.table(tbl)
         if tbl is None:
             tbl = f"nemo_hist_{self._uid}_{_re.sub('[^A-Za-z0-9_]', '_', pred)}"
-            fresh = derived.dropDuplicates().localCheckpoint(eager=False)
-            cnt = fresh.count()
+            fresh, seen = observed_checkpoint(derived.dropDuplicates())
+            cnt = seen["rows"]
             self._schemas.setdefault(pred, fresh.schema)
             if cnt:
                 fresh.write.bucketBy(self.bucket_history, cols[0], *cols[1:]).mode(
@@ -1577,12 +1574,8 @@ class SemiNaiveEngine:
         # projection drops NULL-bearing rows (_project_head null_guard,
         # nemo's error-row semantics), so every row reaching a merge is
         # fully non-NULL — asserted by test_null_head_vars_dropped.
-        fresh = (
-            derived.dropDuplicates()
-            .join(existing, on=cols, how="left_anti")
-            .localCheckpoint(eager=False)
-        )
-        cnt = fresh.count()
+        fresh, seen = observed_checkpoint(derived.dropDuplicates().join(existing, on=cols, how="left_anti"))
+        cnt = seen["rows"]
         if cnt:
             fresh.write.bucketBy(self.bucket_history, cols[0], *cols[1:]).mode(
                 "append"
@@ -1604,9 +1597,53 @@ class SemiNaiveEngine:
 
     def _empty(self, arity: int, pred: str | None = None) -> DataFrame:
         if pred is not None and pred in self._schemas:
-            return self.spark.createDataFrame([], self._schemas[pred])
-        schema = ", ".join(f"c{i} string" for i in range(max(arity, 1)))
-        return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], self._schemas[pred])
+        return local_frame(self.spark, [], ", ".join(f"{c} string" for c in _cols(max(arity, 1))))
+
+
+def _order_key_col(col: Column) -> Column:
+    """Catalyst ordering key of a value struct column that sorts exactly
+    like ``Value.sort_key_bytes`` on atomic values whose float payload is
+    not NaN: a struct of the tag, the integer payload (INT, ULONG as stored
+    — its wrapped i64 keeps the u64 order — and BOOLEAN), ``d + 0.0``
+    (FLOAT, DOUBLE; -0.0 ties 0.0) and the string payload (IRI, STRING,
+    NULL, LANG, OTHER). Spark compares structs field by field and strings
+    as UTF-8 bytes, which is the byte key's order; a LANG/OTHER payload
+    ``text NUL tag`` compares like the key's escaped (text, tag) pair
+    because the split is at its first NUL. Payload fields the tag does not
+    use are masked, so they never break a tie the byte key calls equal.
+    NULL cells get a NULL key (min_by/max_by skip them)."""
+    from nemo_spark.model.values import (
+        T_BOOLEAN,
+        T_DOUBLE,
+        T_FLOAT,
+        T_INT,
+        T_IRI,
+        T_LANG,
+        T_NULL,
+        T_OTHER,
+        T_STRING,
+        T_ULONG,
+    )
+
+    t = col.getField("t")
+    key = F.struct(
+        t.alias("t"),
+        F.when(t.isin(T_INT, T_ULONG, T_BOOLEAN), col.getField("i")).alias("i"),
+        F.when(t.isin(T_FLOAT, T_DOUBLE), col.getField("d") + F.lit(0.0)).alias("d"),
+        F.when(t.isin(T_IRI, T_STRING, T_NULL, T_LANG, T_OTHER), col.getField("s")).alias("s"),
+    )
+    return F.when(col.isNotNull(), key)
+
+
+def _needs_byte_key(col: Column) -> Column:
+    """True on the value cells :func:`_order_key_col` cannot order exactly:
+    tuples and maps (element-wise order), and NaN floats (the byte key
+    orders a NaN by its sign bit, Spark puts every NaN last)."""
+    from nemo_spark.model.values import T_DOUBLE, T_FLOAT, T_MAP, T_TUPLE
+
+    t = col.getField("t")
+    return t.isin(T_TUPLE, T_MAP) | (t.isin(T_FLOAT, T_DOUBLE) & F.isnan(col.getField("d")))
 
 
 _SORT_KEY_UDF = None
@@ -1614,11 +1651,12 @@ _SORT_KEY_UDF = None
 
 def _sort_key_col(col: Column) -> Column:
     """Order-preserving byte key (``Value.sort_key_bytes``) for a value
-    struct column, via an Arrow-batched pandas UDF over the FLATTENED
-    fields — ``i`` travels as Catalyst's exact bigint->string cast because
-    a batch containing any NULL cell reaches pandas as float64 and would
-    corrupt int64 magnitudes above 2^53 (same trap as the export
-    serializer's _flatten_values). Used only by the typed #min/#max path."""
+    struct column, via an Arrow-batched pandas UDF (a Python worker) over
+    the FLATTENED fields — ``i`` travels as Catalyst's exact bigint->string
+    cast because a batch containing any NULL cell reaches pandas as float64
+    and would corrupt int64 magnitudes above 2^53 (same trap as the export
+    serializer's _flatten_values). The typed #min/#max path uses it only
+    when :func:`_needs_byte_key` finds a tuple, map or NaN cell."""
     global _SORT_KEY_UDF
     if _SORT_KEY_UDF is None:
         import pandas as pd

@@ -36,23 +36,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one representative (min id) per exact content group.
-
-    NULL text hashes to the sentinel key 'NULL' (md5 hex is 32 chars, so no
-    collision is possible): NULL-text rows form ONE group and keep their
-    min-id representative — a plain equality rejoin on a NULL digest would
-    never match and silently DELETE every NULL-text row."""
-    h = F.coalesce(F.md5(F.encode(F.col(text_col), "UTF-8")), F.lit("NULL"))
-    strukt = F.struct(F.col(id_col).alias("i"))
-    keep = df.withColumn("__h", h).groupBy("__h").agg(F.min(strukt).alias("__k"))
-    return (
-        df.withColumn("__h", h)
-        .join(keep.select("__h", F.col("__k.i").alias(id_col)), on=["__h", id_col], how="inner")
-        .drop("__h")
-    )
-
-
 def token_shingles(text: Column, k: int = 3) -> Column:
     """Distinct k-token shingles as array<string> (empty when < k tokens).
 

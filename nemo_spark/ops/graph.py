@@ -28,11 +28,11 @@ from __future__ import annotations
 import logging
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from nemo_spark.session import local_rows, single_slice_frame
+from nemo_spark.session import local_rows, observed_checkpoint, single_slice_frame
 
 log = logging.getLogger("nemo_spark.graph")
 
@@ -116,16 +116,14 @@ def _checkpoint_round(rel: DataFrame, reach: int) -> tuple[DataFrame, int, int, 
     ``reach``), its byte width, and the fresh pairs (longer than ``reach //
     2``). A key's width is its string form's length (4 for NULL) and a row
     adds 16 bytes of overhead."""
-    obs = Observation()
     at_frontier = F.col("len") == reach
     width = sum(F.coalesce(F.length(F.col(c).cast("string")), F.lit(4)) for c in ("a", "b")) + 16
-    out = rel.observe(
-        obs,
-        F.count_if(at_frontier).alias("frontier"),
-        F.sum(F.when(at_frontier, width)).alias("bytes"),
-        F.count_if(F.col("len") > reach // 2).alias("fresh"),
-    ).localCheckpoint(eager=True)
-    seen = obs.get
+    out, seen = observed_checkpoint(
+        rel,
+        frontier=F.count_if(at_frontier),
+        bytes=F.sum(F.when(at_frontier, width)),
+        fresh=F.count_if(F.col("len") > reach // 2),
+    )
     return out, seen["frontier"], seen["bytes"] or 0, seen["fresh"]
 
 

@@ -13,11 +13,14 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     AnsiIntervalType,
     BinaryType,
     BooleanType,
+    DataType,
+    DateType,
     DatetimeType,
     NumericType,
     StringType,
@@ -121,6 +124,54 @@ def single_slice_frame(spark, rows, schema):
     out = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     out._nemo_local = True
     return out
+
+
+def local_frame(spark, rows, schema: StructType | str) -> DataFrame:
+    """Driver-held ``rows`` (tuples, struct cells as tuples) as a frame of
+    ``schema`` (a struct type or its DDL string), handed to the JVM as Arrow
+    record batches: no job and no Python worker. ``createDataFrame(list)``
+    instead pickles the rows into an RDD that a Python worker re-serializes
+    on the first job that reads it.
+
+    Arrow carries numbers, strings, binary, booleans, dates and structs of
+    those exactly. A timestamp or interval column keeps the pickled path:
+    collected timestamps are naive local-time datetimes, which Arrow would
+    re-localize from the session time zone, and year-month intervals have no
+    Arrow conversion."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    if not all(_arrow_exact(f.dataType) for f in schema.fields):
+        return spark.createDataFrame(list(rows), schema)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _arrow_exact(dt, nested: bool = False) -> bool:
+    if isinstance(dt, StructType):
+        return not nested and all(_arrow_exact(f.dataType, True) for f in dt.fields)
+    return isinstance(dt, (NumericType, StringType, BinaryType, BooleanType, DateType))
+
+
+def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """``df`` eagerly local-checkpointed (ONE Spark action), and what an
+    :class:`~pyspark.sql.Observation` of that same job saw: ``rows`` (the
+    row count) and one value per aggregate column in ``aggs``, by name.
+
+    The one form of "materialize, then count" in the library: a lazy
+    ``localCheckpoint`` runs its AQE map stages as jobs anyway, and the
+    ``count()`` after it is one more job than this checkpoint alone."""
+    obs = Observation()
+    out = df.observe(
+        obs, F.count(F.lit(1)).alias("rows"), *[c.alias(n) for n, c in aggs.items()]
+    ).localCheckpoint(eager=True)
+    return out, obs.get
 
 
 # column types whose collected Python values are hashable and compare the way

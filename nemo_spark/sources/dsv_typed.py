@@ -55,6 +55,7 @@ from nemo_spark.model.values import (
     parse_dsv_int,
     parse_dsv_string,
 )
+from nemo_spark.session import local_frame
 
 _PARSERS = {
     "any": parse_dsv_any,
@@ -261,15 +262,16 @@ def _read_dsv_whole_files(
 
 
 def typed_rows_df(spark: SparkSession, rows: list[tuple], arity: int) -> DataFrame:
-    """DataFrame of typed value structs from driver-side Value tuples."""
+    """DataFrame of typed value structs from driver-side Value tuples,
+    handed to the JVM through Arrow (:func:`local_frame`)."""
     schema = ", ".join(f"c{i} {VALUE_SCHEMA}" for i in range(arity))
     data = [tuple(v.as_row() for v in row) for row in rows]
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)
 
 
 def empty_typed_df(spark: SparkSession, arity: int) -> DataFrame:
     schema = ", ".join(f"c{i} {VALUE_SCHEMA}" for i in range(max(arity, 1)))
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def peek_field_count(spark: SparkSession, path: str, delimiter: str = ",") -> int:

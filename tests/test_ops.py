@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nemo_spark.kg.link import best_candidate, jaccard, char_ngrams, link_embedding, link_scored
-from nemo_spark.ops.dedup import exact_dedup, jaccard_verify, lsh_candidate_pairs, signatures, simhash64
+from nemo_spark.ops.dedup import jaccard_verify, lsh_candidate_pairs, signatures, simhash64
 from nemo_spark.ops.graph import transitive_closure
 from nemo_spark.ops.similarity import brute_force_topk, bucketed_topk, cosine, pandas_cosine_scores
 
@@ -117,14 +117,6 @@ def test_link_embedding_top1_min_id_tiebreak(spark):
     # min_score drops sub-threshold mentions entirely in top1 mode
     orth = link_embedding(mentions.filter("vec_id = 2"), ents.filter("entity_id <> 'c'"), min_score=0.5)
     assert orth.count() == 0
-
-
-def test_exact_dedup_keeps_min_id(spark):
-    df = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "other text")], ["doc_id", "text"]
-    )
-    kept = {r.doc_id for r in exact_dedup(df).collect()}
-    assert kept == {1, 3}
 
 
 def test_jaccard_verify_known_pair(spark):
@@ -963,18 +955,6 @@ def test_constraint_propagation_per_session(spark):
     assert spark.conf.get(_CP_KEY) == "false"  # e1 still open on its session
     e1.close()
     assert spark.conf.get(_CP_KEY) == spark_prev
-
-
-def test_exact_dedup_null_text_kept(spark):
-    # NULL text must dedup to ONE representative, not vanish: a plain
-    # equality rejoin on a NULL md5 key matches nothing
-    from nemo_spark.ops.dedup import exact_dedup
-
-    df = spark.createDataFrame(
-        [(1, None), (2, "x"), (3, None)], "doc_id long, text string"
-    )
-    got = {(r.doc_id, r.text) for r in exact_dedup(df).collect()}
-    assert got == {(1, None), (2, "x")}
 
 
 def test_lsh_short_docs_pair_on_exact_text(spark):

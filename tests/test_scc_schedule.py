@@ -139,3 +139,17 @@ def test_import_resolution_stays_serial(spark, tmp_path, monkeypatch):
         rows = sorted(tuple(c.i for c in row) for row in r.table("p").collect())
     assert calls == [True]
     assert rows == [(1, 2), (3, 4), (8, 9)]
+
+
+def test_inline_facts_are_a_set(spark):
+    """Inline program facts enter as a set: a repeated fact is stored and
+    counted once, like a registered or derived one."""
+    prog = Program(
+        rules=[Rule(head=Atom("q", X), body=[Atom("p", X)])],
+        facts={"p": [(1,), (1,), (2,)]},
+    )
+    eng = SemiNaiveEngine(spark, local_stratum_threshold=0)
+    eng.run(prog)
+    assert sorted(r.c0 for r in eng.table("p").collect()) == [1, 2]
+    assert eng._table_counts["p"] == 2
+    assert sorted(r.c0 for r in eng.table("q").collect()) == [1, 2]

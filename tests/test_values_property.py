@@ -11,12 +11,20 @@ whole engine leans on (joins, #min/#max, dedup, export parity):
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+import math
+
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from nemo_spark.model.values import (
     I64_MAX,
     I64_MIN,
+    T_DOUBLE,
+    T_FLOAT,
+    T_MAP,
+    T_TUPLE,
+    U64_MAX,
+    XSD,
     Value,
     f32_round,
     parse_dsv_any,
@@ -207,3 +215,74 @@ def test_tuple_order_is_elementwise(tuples):
     got = min(tuples, key=lambda v: v.order_key())
     want = min(tuples, key=ref_key)
     assert got.order_key() == want.order_key()
+
+
+# ------------------------------- Catalyst #min/#max key (_order_key_col)
+
+_key_text = st.text(alphabet=st.sampled_from("a\x00zé中") | st.characters(), max_size=6)
+_key_atomic = st.one_of(
+    st.sampled_from([I64_MIN, I64_MIN + 1, -1, 0, 1, I64_MAX]).map(Value.int),
+    st.integers(min_value=I64_MIN, max_value=I64_MAX).map(Value.int),
+    st.integers(min_value=I64_MAX + 1, max_value=U64_MAX).map(Value.int),  # ULONG
+    # raw payloads: -0.0, infinities and NaN, which the constructors reject
+    st.floats(width=64).map(lambda d: Value(T_DOUBLE, d=d)),
+    st.floats(width=32).map(lambda d: Value(T_FLOAT, d=d)),
+    st.booleans().map(Value.boolean),
+    _key_text.map(Value.string),
+    _key_text.map(Value.iri),
+    _key_text.map(Value.null),
+    st.tuples(_key_text, st.sampled_from(["en", "de", "pt-br", "x\x00y"])).map(
+        lambda t: Value.lang_string(*t)
+    ),
+    st.tuples(_key_text, st.sampled_from([XSD + "date", "http://ex/dt", ""])).map(
+        lambda t: Value.other(*t)
+    ),
+)
+_key_values = st.one_of(
+    _key_atomic,
+    st.lists(_key_atomic, max_size=2).map(Value.tuple_of),
+    st.lists(st.tuples(_key_atomic, _key_atomic), max_size=2).map(Value.map_of),
+)
+_KEY_EDGES = [
+    Value.int(I64_MIN), Value.int(I64_MAX), Value.int(I64_MAX + 1), Value.int(U64_MAX),
+    Value(T_DOUBLE, d=-0.0), Value(T_DOUBLE, d=0.0), Value(T_DOUBLE, d=math.inf),
+    Value(T_DOUBLE, d=-math.inf), Value(T_DOUBLE, d=math.nan), Value(T_FLOAT, d=-0.0),
+    Value(T_FLOAT, d=math.nan), Value.boolean(False), Value.boolean(True),
+    Value.string(""), Value.string("\x00"), Value.string("a\x00b"), Value.string("a"),
+    Value.iri("ü"), Value.null("a"), Value.lang_string("a\x00b", "en"),
+    Value.lang_string("a", "en"), Value.other("a", "http://ex/dt"),
+    Value.tuple_of([Value.int(1)]), Value.map_of([(Value.int(1), Value.string("x"))]),
+]
+
+
+@given(st.lists(_key_values, min_size=2, max_size=10))
+@example(_KEY_EDGES)
+@settings(deadline=None, max_examples=30)
+def test_order_key_col_orders_like_sort_key_bytes(spark, vals):
+    """The Catalyst #min/#max key compares every pair of values exactly as
+    their ``sort_key_bytes`` do (both orders and ties, evaluated by Spark),
+    and the fallback predicate flags precisely the values it cannot order:
+    tuples, maps and NaN floats."""
+    from pyspark.sql import functions as F
+
+    from nemo_spark.engine.seminaive import _needs_byte_key, _order_key_col
+    from nemo_spark.sources.dsv_typed import typed_rows_df
+
+    df = typed_rows_df(spark, [(Value.int(n), v) for n, v in enumerate(vals)], 2)
+    a, b = F.col("a.c1"), F.col("b.c1")
+    got = df.alias("a").crossJoin(df.alias("b")).select(
+        F.col("a.c0.i").alias("x"),
+        F.col("b.c0.i").alias("y"),
+        (_order_key_col(a) < _order_key_col(b)).alias("lt"),
+        (_order_key_col(b) < _order_key_col(a)).alias("gt"),
+        _needs_byte_key(a).alias("flag"),
+    ).collect()
+    assert len(got) == len(vals) ** 2
+    for r in got:
+        va, vb = vals[r.x], vals[r.y]
+        flagged = va.t in (T_TUPLE, T_MAP) or (va.t in (T_FLOAT, T_DOUBLE) and math.isnan(va.d))
+        assert r.flag == flagged, va
+        if flagged or vb.t in (T_TUPLE, T_MAP) or (vb.t in (T_FLOAT, T_DOUBLE) and math.isnan(vb.d)):
+            continue
+        ka, kb = va.sort_key_bytes(), vb.sort_key_bytes()
+        assert (r.lt, r.gt) == (ka < kb, kb < ka), (va, vb)
