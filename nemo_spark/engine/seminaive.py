@@ -853,6 +853,8 @@ class SemiNaiveEngine:
                         continue  # Values compare exactly on both paths
                     if not _py_const_matches_spark_type(t, schema.fields[i].dataType):
                         return False
+        if not _join_types_agree(rules, {p: self._tables[p].schema for p in preds if p in self._tables}):
+            return False
         total = sum(self._table_counts.get(p, 0) for p in preds)
         if total > self.local_stratum_threshold:
             return False
@@ -1754,6 +1756,40 @@ def _py_const_matches_spark_type(t: Any, dtype: Any) -> bool:
     if isinstance(t, str):
         return isinstance(dtype, StringType)
     return False  # unknown shape: stay distributed
+
+
+def _join_types_agree(rules: list[Rule], schemas: dict) -> bool:
+    """Does every variable of ``rules`` bind columns of one type, and every
+    derived column hold one type? Python compares values strictly, while
+    Spark joins and unions mixed types through an implicit cast (which
+    fails under ANSI on a malformed string), so a local stratum must not
+    mix them. Integral types mix safely. Derived columns take the types of
+    the body columns that bind their head variables."""
+    from pyspark.sql.types import IntegralType
+
+    col: dict[tuple, set] = {
+        (p, i): {"integral" if isinstance(f.dataType, IntegralType) else f.dataType.simpleString()}
+        for p, schema in schemas.items()
+        for i, f in enumerate(schema.fields)
+    }
+    changed = True
+    while changed:
+        changed = False
+        for r in rules:
+            bound: dict[str, set] = {}
+            for a in r.body + r.negated:
+                for i, t in enumerate(a.terms):
+                    if isinstance(t, Var):
+                        bound.setdefault(t.name, set()).update(col.get((a.pred, i), ()))
+            for h in r.heads():
+                for i, t in enumerate(h.terms):
+                    types = bound.get(t.name, set()) if isinstance(t, Var) else set()
+                    if not types <= col.setdefault((h.pred, i), set()):
+                        col[(h.pred, i)] |= types
+                        changed = True
+            if any(len(ts) > 1 for ts in bound.values()):
+                return False
+    return all(len(ts) <= 1 for ts in col.values())
 
 
 def _lit_term(t: Any) -> Column:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from nemo_spark.session import local_rows, single_slice_frame
+from nemo_spark.session import local_frame, local_rows
 
 log = logging.getLogger("nemo_spark.cc")
 
@@ -177,7 +177,7 @@ def _star_cc(
 def _local_cc(spark, rows, dt) -> DataFrame:
     """Driver-side union-find over the gate's rows — the caller already
     holds every edge, so this costs zero extra Spark jobs and returns a
-    single-slice driver-local frame."""
+    driver-local frame built from Arrow (:func:`local_frame`)."""
     parent: dict = {}
 
     def find(x):
@@ -194,7 +194,7 @@ def _local_cc(spark, rows, dt) -> DataFrame:
                 ra, rb = rb, ra
             parent[rb] = ra
     schema = StructType([StructField("node", dt), StructField("component", dt)])
-    return single_slice_frame(spark, [(n, find(n)) for n in list(parent)], schema)
+    return local_frame(spark, [(n, find(n)) for n in list(parent)], schema)
 
 
 def canonical_map_from_alias_dict(alias_dict: DataFrame, small_graph_threshold: int = 100_000) -> DataFrame:

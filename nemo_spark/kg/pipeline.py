@@ -72,8 +72,9 @@ def run_pipeline(
             df = checkpoint_store.snapshot(name, df, step)
         elif materialize and not getattr(df, "_nemo_local", False):
             # _nemo_local frames (driver-computed small CC/TC results) are
-            # single-slice driver-held frames: already materialized, cheap to broadcast —
-            # a localCheckpoint would only re-ship them as one more job
+            # Arrow-built local relations: already materialized, cheap to
+            # broadcast — a localCheckpoint would only re-ship them as one
+            # more job
             df = df.localCheckpoint(eager=True)
         metrics[name] = {"wall_sec": time.time() - t0}
         return df

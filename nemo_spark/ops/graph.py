@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from nemo_spark.session import local_rows, observed_checkpoint, single_slice_frame
+from nemo_spark.session import local_frame, local_rows, observed_checkpoint
 
 log = logging.getLogger("nemo_spark.graph")
 
@@ -137,9 +137,10 @@ _LOCAL_TC_MAX_PAIRS = 500_000
 def _local_tc(spark, rows, dt, src: str, dst: str) -> DataFrame | None:
     """Driver-side closure over the gate's rows (BFS per source) — the
     caller already holds every edge, so closing locally costs zero extra
-    Spark jobs and returns a single-slice driver-local frame (cheap to
-    broadcast downstream). Returns ``None`` when the closed pair set exceeds
-    :data:`_LOCAL_TC_MAX_PAIRS` (caller runs the distributed path)."""
+    Spark jobs and returns a driver-local frame built from Arrow
+    (:func:`local_frame`, cheap to broadcast downstream). Returns ``None``
+    when the closed pair set exceeds :data:`_LOCAL_TC_MAX_PAIRS` (caller
+    runs the distributed path)."""
     adj: dict = {}
     for a, b in rows:
         adj.setdefault(a, set()).add(b)
@@ -157,4 +158,4 @@ def _local_tc(spark, rows, dt, src: str, dst: str) -> DataFrame | None:
             stack.extend(adj.get(x, ()))
         data.extend((s, x) for x in seen)
     schema = StructType([StructField(src, dt), StructField(dst, dt)])
-    return single_slice_frame(spark, data, schema)
+    return local_frame(spark, data, schema)

@@ -6,6 +6,11 @@ Scale rationale (100 TB / 1000-executor design, tested on local[N]):
 - shuffle partitions sized by parallelism; at cluster scale this is set to
   2-3x total cores via spark-submit conf, not hardcoded.
 - Arrow enabled for the pandas-UDF extraction path (no per-row Python).
+- Driver-held rows cross the JVM boundary as Arrow both ways
+  (:func:`local_rows`, :func:`local_frame`), so a driver-local fast path
+  starts no Python worker; on a local master the workers the UDFs do start
+  fork from a daemon that already imported their libraries
+  (:mod:`nemo_spark.worker_daemon`).
 """
 
 from __future__ import annotations
@@ -22,9 +27,11 @@ from pyspark.sql.types import (
     DataType,
     DateType,
     DatetimeType,
+    DayTimeIntervalType,
     NumericType,
     StringType,
     StructType,
+    TimestampNTZType,
 )
 
 
@@ -59,6 +66,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", _daemon_module(master))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -75,6 +83,27 @@ def get_spark(
             stacklevel=2,
         )
     return b.getOrCreate()
+
+
+# the directory that holds the nemo_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _daemon_module(master: str) -> str:
+    """The module Spark starts as its Python worker daemon: the preloading
+    :mod:`nemo_spark.worker_daemon` when the workers fork on this host (a
+    ``local[...]`` master) and the daemon can import this package from its
+    path (the JVM's working directory, ``PYTHONPATH`` or site-packages);
+    else the stock ``pyspark.daemon``. A cluster executor receives the
+    package as ``--py-files`` only when a task runs, after its daemon
+    started."""
+    if re.fullmatch(r"local(\[[^\]]*\])?", master):
+        import site
+
+        path = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+        if os.path.realpath(_PACKAGE_ROOT) in {os.path.realpath(d) for d in path}:
+            return "nemo_spark.worker_daemon"
+    return "pyspark.daemon"
 
 
 # a shuffle exchange node in a plan tree string; BroadcastExchange is not one
@@ -111,52 +140,67 @@ def fan_out(df, min_parallelism: int | None = None):
     return df
 
 
-def single_slice_frame(spark, rows, schema):
-    """Driver-held rows as a ONE-slice frame, tagged ``_nemo_local``.
+def local_frame(spark, rows, schema: StructType | str) -> DataFrame:
+    """Driver-held ``rows`` (tuples, struct cells as tuples) as a frame of
+    ``schema`` (a struct type or its DDL string), handed to the JVM as Arrow
+    record batches: a Catalyst ``LocalRelation``, built with no job and no
+    Python worker. ``createDataFrame(list)`` instead pickles the rows into
+    an RDD that a Python worker re-serializes on the first job that reads
+    it. Every driver-local result in the library is built here: the small
+    CC and TC paths, the engine's local strata and its inline facts.
 
-    PySpark's createDataFrame always routes local data through
-    ``parallelize`` (there is no true Catalyst LocalRelation from Python),
-    so the cheapest downstream shape is a single pickled slice: one task
-    per job and no per-slice driver round-trips (the default
-    defaultParallelism slices cost ~150 ms EACH to fetch when coalesced).
-    The ``_nemo_local`` tag tells pipeline-stage materialization that a
-    localCheckpoint would only re-ship data the driver already holds."""
-    out = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    Arrow carries the :func:`_arrow_exact` types exactly. A timestamp or
+    year-month interval column keeps the pickled path: collected timestamps
+    are naive local-time datetimes, which Arrow would re-localize from the
+    session time zone, and year-month intervals have no Arrow conversion.
+
+    The frame is tagged ``_nemo_local``: its rows are already materialized,
+    so pipeline stages skip re-checkpointing it, and the benchmark's tracer
+    reads the tag off CC and TC outputs to count which path ran. The tag is
+    a Python attribute set only here; a projection drops it, so a caller
+    that projects a local frame re-tags the result
+    (``canonical_map_from_alias_dict``). Detecting it from the plan (a
+    ``LocalRelation`` leaf under projections) would cost a Py4J plan walk
+    per stage to learn what this function already knows. The relation has
+    up to ``defaultParallelism`` slices, so a snapshot of it writes up to
+    that many part files."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    if all(_arrow_exact(f.dataType) for f in schema.fields):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+        out = spark.createDataFrame(table, schema)
+    else:
+        out = spark.createDataFrame(list(rows), schema)
     out._nemo_local = True
     return out
 
 
-def local_frame(spark, rows, schema: StructType | str) -> DataFrame:
-    """Driver-held ``rows`` (tuples, struct cells as tuples) as a frame of
-    ``schema`` (a struct type or its DDL string), handed to the JVM as Arrow
-    record batches: no job and no Python worker. ``createDataFrame(list)``
-    instead pickles the rows into an RDD that a Python worker re-serializes
-    on the first job that reads it.
-
-    Arrow carries numbers, strings, binary, booleans, dates and structs of
-    those exactly. A timestamp or interval column keeps the pickled path:
-    collected timestamps are naive local-time datetimes, which Arrow would
-    re-localize from the session time zone, and year-month intervals have no
-    Arrow conversion."""
-    if isinstance(schema, str):
-        schema = DataType.fromDDL(schema)
-    if not all(_arrow_exact(f.dataType) for f in schema.fields):
-        return spark.createDataFrame(list(rows), schema)
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, schema)
+# types whose Python values cross Arrow unchanged both ways: createDataFrame
+# from an Arrow table builds what createDataFrame(list) builds, and toArrow()
+# yields what collect() yields (a struct as a dict of its fields, so field
+# names must be distinct). Not a timestamp: toArrow() returns it UTC-aware,
+# collect() naive in local time.
+_ARROW_EXACT = (
+    NumericType, StringType, BinaryType, BooleanType, DateType, TimestampNTZType, DayTimeIntervalType,
+)
 
 
 def _arrow_exact(dt, nested: bool = False) -> bool:
     if isinstance(dt, StructType):
-        return not nested and all(_arrow_exact(f.dataType, True) for f in dt.fields)
-    return isinstance(dt, (NumericType, StringType, BinaryType, BooleanType, DateType))
+        names = dt.fieldNames()
+        return (
+            not nested
+            and len(set(names)) == len(names)
+            and all(_arrow_exact(f.dataType, True) for f in dt.fields)
+        )
+    return isinstance(dt, _ARROW_EXACT)
 
 
 def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
@@ -210,18 +254,22 @@ def local_rows(frame, max_rows: int | None = None) -> list[tuple] | None:
     struct cell is fine: struct equality treats it like Python does. Struct
     cells come back as plain tuples.
 
-    Local results are built with :func:`single_slice_frame`, whose
-    ``_nemo_local`` tag stays: pipeline stages skip re-checkpointing tagged
-    frames, and the benchmark's tracer reads the tag from CC and TC outputs
-    to count which path ran."""
-    if not all(_local_type(f.dataType) for f in frame.schema.fields):
+    The rows cross as Arrow (``toArrow()``, no Python worker) when every
+    column is of a type whose Arrow values equal ``collect()``'s
+    (:func:`_arrow_exact`); a frame with any other column collects ``Row``
+    objects. Local results go back through :func:`local_frame`."""
+    fields = frame.schema.fields
+    if not all(_local_type(f.dataType) for f in fields):
         return None
     if max_rows is not None:
         frame = frame.limit(max_rows + 1)
-    rows = frame.collect()
+    if all(_arrow_exact(f.dataType) for f in fields):
+        cols = [c.to_pylist() for c in frame.toArrow().columns]
+        rows = [tuple(tuple(c.values()) if isinstance(c, dict) else c for c in r) for r in zip(*cols)]
+    else:
+        rows = [tuple(tuple(c) if isinstance(c, Row) else c for c in r) for r in frame.collect()]
     if max_rows is not None and len(rows) > max_rows:
         return None
-    rows = [tuple(tuple(c) if isinstance(c, Row) else c for c in r) for r in rows]
     if any(_declined(c) for r in rows for c in r):
         return None
     return rows

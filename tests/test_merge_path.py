@@ -14,7 +14,7 @@ from nemo_spark.engine import seminaive
 from nemo_spark.engine.seminaive import SemiNaiveEngine
 from nemo_spark.model.rules import Atom, Program, Rule, Var, agg
 from nemo_spark.model.values import Value
-from nemo_spark.session import local_frame, local_rows
+from nemo_spark.session import _arrow_exact, local_frame, local_rows
 from nemo_spark.sources.dsv_typed import typed_rows_df
 
 G, X, Y = Var("g"), Var("x"), Var("y")
@@ -76,7 +76,8 @@ _LOCAL_TYPES = [
         [(datetime.datetime(2024, 3, 31, 1, 30, 0, 123456),), (datetime.datetime(1970, 1, 1),)],
         False,
     ),
-    ("timestamp_ntz", "c0 timestamp_ntz", [(datetime.datetime(2024, 1, 1, 12),)], False),
+    ("timestamp_ntz", "c0 timestamp_ntz", [(datetime.datetime(2024, 1, 1, 12),)], True),
+    ("day_time_interval", "c0 interval day to second", [(datetime.timedelta(days=-1, microseconds=5),)], True),
 ]
 
 
@@ -85,8 +86,8 @@ def test_local_frame_equals_pickled_frame(spark, name, ddl, rows, arrow):
     """The Arrow-built frame of a local stratum's rows equals the frame
     ``createDataFrame(list)`` built from the same rows: same schema, same
     rows. The rows are what ``local_rows`` collects from a table of that
-    type. Timestamps keep the pickled path (a Python worker shows in the
-    lineage as a PythonRDD); every other admitted type takes Arrow."""
+    type. Time-zone timestamps keep the pickled path (a Python worker shows
+    in the lineage as a PythonRDD); every other admitted type takes Arrow."""
     table = spark.createDataFrame(rows, ddl)
     got_rows = local_rows(table)
     assert got_rows is not None
@@ -139,6 +140,72 @@ def test_local_stratum_hands_back_arrow_frames(spark, typed):
     assert got[0].schema == got[1_000].schema
     assert got[0].exceptAll(got[1_000]).count() == got[1_000].exceptAll(got[0]).count() == 0
     assert got[0].count() == 20 * 21 // 2
+
+
+# ------------------------------------------------------ Arrow collect
+
+# (name, DDL, rows, toArrow() values equal collect()'s)
+_COLLECT_TYPES = [(n, d, r, n != "timestamp") for n, d, r, _ in _LOCAL_TYPES] + [
+    ("struct_binary_date", "c0 struct<x:binary,y:date>", [((b"\x00", datetime.date(2020, 1, 1)),)], True),
+]
+
+
+def _arrow_values(frame):
+    """``toArrow()`` values, a struct cell as its dict's values."""
+    cols = [c.to_pylist() for c in frame.toArrow().columns]
+    return [tuple(tuple(c.values()) if isinstance(c, dict) else c for c in r) for r in zip(*cols)]
+
+
+@pytest.mark.parametrize("name, ddl, rows, equal", _COLLECT_TYPES, ids=[t[0] for t in _COLLECT_TYPES])
+def test_arrow_collect_values_equal_row_collect(spark, name, ddl, rows, equal):
+    """``local_rows`` collects through ``toArrow()`` exactly for the types
+    whose Arrow values equal (and hash like) ``collect()``'s: binary is
+    ``bytes`` both ways, a struct a dict of its fields (made a tuple). A
+    time-zone timestamp differs (UTC-aware against naive local time), so it
+    keeps ``collect()``."""
+    table = spark.createDataFrame(rows, ddl)
+    rowwise = [tuple(tuple(c) if isinstance(c, tuple) else c for c in r) for r in table.collect()]
+    arrow = _arrow_values(table)
+    same = [tuple(map(repr, r)) for r in arrow] == [tuple(map(repr, r)) for r in rowwise]
+    assert same == equal
+    assert _arrow_exact(table.schema.fields[0].dataType) == equal
+    assert local_rows(table) == rowwise
+    if name == "binary":
+        assert {type(r[0]) for r in arrow} == {type(r[0]) for r in rowwise} == {bytes}
+
+
+@pytest.mark.parametrize("frame", ["range", "shuffled", "strings"])
+def test_bounded_arrow_collect_runs_no_more_jobs(spark, frame):
+    """The gate's bounded ``limit(n + 1)`` collect runs no more Spark jobs
+    through ``toArrow()`` than the ``Row`` collect does on local[4]."""
+    from pyspark.sql import functions as F
+
+    base = spark.range(20_000)
+    df = {
+        "range": base.select(F.col("id").alias("a"), (F.col("id") + 1).alias("b")),
+        "shuffled": base.groupBy((F.col("id") % 7_000).alias("a")).agg(F.max("id").alias("b")),
+        "strings": base.select(F.concat(F.lit("a:"), F.col("id").cast("string")).alias("a")),
+    }[frame]
+    for n in (10_000, 100_000):
+        rows_jobs, rows = _jobs(spark, f"rows-{frame}-{n}", lambda: df.limit(n + 1).collect())
+        arrow_jobs, table = _jobs(spark, f"arrow-{frame}-{n}", lambda: df.limit(n + 1).toArrow())
+        assert table.num_rows == len(rows)
+        assert arrow_jobs <= rows_jobs, (n, arrow_jobs, rows_jobs)
+
+
+def test_local_cc_and_tc_outputs_are_arrow_local_frames(spark):
+    """The small-graph CC and TC results are Arrow-built local frames: no
+    ``PythonRDD`` (a pickled slice read back by a Python worker) in their
+    lineage, and tagged ``_nemo_local`` for the pipeline and the tracer."""
+    from nemo_spark.kg.canonicalize import canonical_map_from_alias_dict, connected_components
+    from nemo_spark.ops.graph import transitive_closure
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(50)] + [(100, 101)], "src bigint, dst bigint")
+    aliases = spark.createDataFrame([("ibm", "q1"), ("big blue", "q1"), ("sap", "q2")], "alias string, entity_id string")
+    for out in (connected_components(edges), transitive_closure(edges), canonical_map_from_alias_dict(aliases)):
+        assert getattr(out, "_nemo_local", False)
+        assert "PythonRDD" not in out._jdf.queryExecution().toRdd().toDebugString()
+    assert transitive_closure(edges).count() == 50 * 51 // 2 + 1
 
 
 # ------------------------------------------------------ typed #min/#max
