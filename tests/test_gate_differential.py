@@ -62,8 +62,8 @@ def edge_lists(draw):
     return src_t, dst_t, rows
 
 
-def _frame(spark, src_t, dst_t, rows, names=("src", "dst")):
-    return spark.createDataFrame(rows, f"{names[0]} {src_t}, {names[1]} {dst_t}")
+def _frame(spark, src_t, dst_t, rows):
+    return spark.createDataFrame(rows, f"src {src_t}, dst {dst_t}")
 
 
 def _admitted(src_t, dst_t, rows, struct_ok: bool) -> bool:
